@@ -7,7 +7,9 @@ JVM.
 
 Keys are skewed throughout: 80% of CDC updates/deletes, point reads and DML
 hit 2% of the keys (the hot keys), and order customers, supplier keys and
-event users are Zipf-like.
+event users are Zipf-like. These proportions, the CDC op mix and the serve
+call mix are assumptions of this benchmark, not measured traffic: the
+reference publishes none. README.md gives the reason for each.
 """
 
 from __future__ import annotations
@@ -23,11 +25,20 @@ import pyarrow.parquet as pq
 
 # ---------------------------------------------------------------- warehouse
 
-N_CUSTOMERS = 1_500
-N_ORDERS = 15_000
-N_EVENT_USERS = 150
-N_EVENTS = 10_000
-N_DOCUMENTS = 1_000
+# row counts per scale, after the TPC-H-shaped fixtures the operators are
+# tested on (documents: 1,000 at sf0.01 so the served search corpus is not
+# tiny, 100 at sf0.001, which only warms up); lake_serve uses sf0.01,
+# operator_batch sf0.1 and warms up on sf0.001
+SIZES = {
+    "sf0.001": {"customers": 150, "orders": 1_500, "parts": 200, "suppliers": 10,
+                "events": 1_000, "event_users": 15, "documents": 100},
+    "sf0.01": {"customers": 1_500, "orders": 15_000, "parts": 2_000, "suppliers": 100,
+               "events": 10_000, "event_users": 150, "documents": 1_000},
+    "sf0.1": {"customers": 15_000, "orders": 150_000, "parts": 20_000, "suppliers": 1_000,
+              "events": 100_000, "event_users": 1_500, "documents": 5_000},
+}
+N_CUSTOMERS = SIZES["sf0.01"]["customers"]
+N_ORDERS = SIZES["sf0.01"]["orders"]
 HOT_SHARE = 0.02  # share of keys that are hot
 HOT_HITS = 0.8  # share of keyed accesses that go to the hot keys
 
@@ -53,10 +64,12 @@ def _zipf_keys(rng: np.random.Generator, n_keys: int, size: int) -> np.ndarray:
     return (rng.zipf(1.3, size) - 1) % n_keys
 
 
-def warehouse_tables(seed: int) -> dict[str, pa.Table]:
-    """TPC-H-shaped customer/orders/lineitem plus events and documents."""
+def warehouse_tables(seed: int, scale: str = "sf0.01") -> dict[str, pa.Table]:
+    """TPC-H-shaped customer/orders/lineitem plus events and documents,
+    with the row counts of ``SIZES[scale]``."""
+    size = SIZES[scale]
     rng = np.random.default_rng([seed, 1])
-    c = N_CUSTOMERS
+    c = size["customers"]
     customer = pa.table({
         "c_custkey": pa.array(np.arange(c), pa.int64()),
         "c_name": [f"Customer#{i:09d}" for i in range(c)],
@@ -65,7 +78,7 @@ def warehouse_tables(seed: int) -> dict[str, pa.Table]:
         "c_mktsegment": [SEGMENTS[i] for i in rng.integers(0, 5, c)],
     })
 
-    o = N_ORDERS
+    o = size["orders"]
     start = _days(dt.datetime(1995, 1, 1))
     odate = start + rng.integers(0, 1_300, o)
     orders = pa.table({
@@ -85,8 +98,8 @@ def warehouse_tables(seed: int) -> dict[str, pa.Table]:
     ship = odate[l_order] + rng.integers(1, 122, n)
     lineitem = pa.table({
         "l_orderkey": pa.array(l_order, pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, 2_000, n), pa.int64()),
-        "l_suppkey": pa.array(_zipf_keys(rng, 100, n), pa.int64()),
+        "l_partkey": pa.array(rng.integers(0, size["parts"], n), pa.int64()),
+        "l_suppkey": pa.array(_zipf_keys(rng, size["suppliers"], n), pa.int64()),
         "l_linenumber": pa.array(l_linenumber, pa.int32()),
         "l_quantity": qty,
         "l_extendedprice": np.round(qty * rng.uniform(900.0, 2_100.0, n), 2),
@@ -97,20 +110,21 @@ def warehouse_tables(seed: int) -> dict[str, pa.Table]:
         "l_shipdate": pa.array(ship.astype("datetime64[D]").astype("datetime64[us]")),
     })
 
-    e = N_EVENTS
+    e = size["events"]
     ev_start = np.datetime64("2024-01-01T00:00:00", "us")
     ts = ev_start + np.sort(rng.integers(0, 30 * 86_400 * 1_000_000, e)).astype("timedelta64[us]")
     events = pa.table({
         "event_id": pa.array(np.arange(e), pa.int64()),
         "ts": pa.array(ts),
-        "user_id": pa.array(_zipf_keys(rng, N_EVENT_USERS, e), pa.int64()),
+        "user_id": pa.array(_zipf_keys(rng, size["event_users"], e), pa.int64()),
         "event_type": [EVENT_TYPES[i] for i in rng.integers(0, 5, e)],
         "value": np.round(rng.uniform(0.0, 100.0, e), 2),
         "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, e)],
     })
 
+    n_docs = size["documents"]
     docs: list[str] = []
-    for i in range(N_DOCUMENTS):
+    for i in range(n_docs):
         r = rng.random()
         if i > 10 and r < 0.03:  # exact duplicate
             docs.append(docs[int(rng.integers(0, i))])
@@ -123,10 +137,10 @@ def warehouse_tables(seed: int) -> dict[str, pa.Table]:
             k = int(rng.integers(15, 80))
             docs.append(" ".join(VOCAB[j] for j in rng.integers(0, len(VOCAB), k)))
     documents = pa.table({
-        "doc_id": pa.array(np.arange(N_DOCUMENTS), pa.int64()),
+        "doc_id": pa.array(np.arange(n_docs), pa.int64()),
         "text": docs,
-        "lang": [LANGS[i] for i in rng.integers(0, 5, N_DOCUMENTS)],
-        "source": [f"src{i}" for i in rng.integers(0, 20, N_DOCUMENTS)],
+        "lang": [LANGS[i] for i in rng.integers(0, 5, n_docs)],
+        "source": [f"src{i}" for i in rng.integers(0, 20, n_docs)],
         "n_chars": pa.array([len(d) for d in docs], pa.int64()),
     })
     return {
@@ -149,9 +163,16 @@ def write_tables(tables: dict[str, pa.Table], out_dir: str) -> None:
 
 CDC_ROW_DDL = "id bigint, name string, email string, city string, updated_at bigint"
 CDC_COLUMNS = ["id", "name", "email", "city", "updated_at"]
-CDC_SEED_KEYS = 10_000
-CDC_BATCHES = 10
-CDC_BATCH_ROWS = 1_500
+CDC_SEED_KEYS = 50_000
+# 7 batches cross the delta-compaction threshold (2) twice and keep a run
+# within its time budget
+CDC_BATCHES = 7
+# an earlier measured run of this CDC path streamed 212,620 changes in 24
+# micro-batches, 8,859 per batch
+CDC_BATCH_ROWS = 8_860
+# op mix of the change log: inserts / updates / deletes (see README.md)
+CDC_INSERT_SHARE = 0.20
+CDC_DELETE_SHARE = 0.12
 CITIES = ["Pune", "Mumbai", "Delhi", "Chennai", "Kolkata", "Jaipur", "Surat", "Indore"]
 
 
@@ -194,13 +215,13 @@ class CdcLog:
             for _ in range(batch_rows):
                 stamp += 1
                 r = rng.random()
-                if r < 0.2 or len(live) < 2:
+                if r < CDC_INSERT_SHARE or len(live) < 2:
                     key, op = next_key, "c"
                     next_key += 1
                     pos[key] = len(live)
                     live.append(key)
                     self.inserts += 1
-                elif r < 0.88:
+                elif r < 1.0 - CDC_DELETE_SHARE:
                     key, op = pick(), "u"
                 else:
                     key, op = pick(), "d"
@@ -226,6 +247,14 @@ class CdcLog:
             out.append(json.dumps({"payload": env} if row[4] % 2 else env))
         return out
 
+    def write_seed(self, path: str) -> None:
+        """The table before the stream, as one parquet file."""
+        cols = list(zip(*self.seed_rows))
+        pq.write_table(pa.table({
+            name: pa.array(col, pa.int64() if name in ("id", "updated_at") else pa.string())
+            for name, col in zip(CDC_COLUMNS, cols)
+        }), path)
+
     def write_files(self, src_dir: str) -> int:
         """One file per micro-batch with strictly increasing mtimes (the
         file source orders new files by mtime). Returns the bytes written."""
@@ -244,9 +273,11 @@ class CdcLog:
 
 # ---------------------------------------------------------------- serve plan
 
-# one round of LakeEngine calls as (call, argument): the composition is fixed
-# (reads are the majority, so the median call is a point read), only the
-# order is shuffled per round; keys, dates and words come from the seed
+# one round of LakeEngine calls as (call, argument). The composition is an
+# assumed admin-API mix (README.md): point reads outnumber the rest, and
+# every other call kind runs at least once a round so each is timed every
+# run. Only the order is shuffled per round; keys, dates and words come
+# from the seed
 SERVE_ROUND = (
     [("read", None)] * 8
     + [("sql", "q1"), ("sql", "q3"), ("sql", "q6")]

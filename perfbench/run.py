@@ -1,6 +1,6 @@
 """Lakehouse benchmark: CDC ingest, interactive serving and an operator batch.
 
-    python3 perfbench/run.py --workload lake_serve --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload lake_serve --seed 1 --seconds 15 --trace 0
 
 Run from the repository root. One process, one Spark session from
 ``session.get_spark`` at ``local[min(3, nproc - 1)]``, one client thread
@@ -13,14 +13,16 @@ Run from the repository root. One process, one Spark session from
   reads, TPC-H-shaped SQL, keyed DML, time travel / diff / change feed,
   search) against a warehouse built during set-up.
 - ``operator_batch``: registered operators, each built and collected once,
-  on a fresh copy of the generated fixture tables.
+  on a fresh copy of sf0.1-sized generated fixture tables.
 
 Another round starts only if it fits in ``--seconds`` judging by the last
 one; at least one round always runs. Every output is checked against an
-answer computed apart from the engine (``checks.py``). The last stdout line
-is ``{"correct", "attempted", "failed", "metrics"}``; the line before it
-carries run details: host steal, rounds, the workload's named figures and
-any problems found. ``--trace 1`` wraps engine functions with spans and
+answer computed apart from the engine (``checks.py``). An operation that
+raises, or whose output fails its check, counts as failed and the run goes
+on; a wrong output also makes ``correct`` false. The last stdout line is
+``{"correct", "attempted", "failed", "metrics"}``; the line before it
+carries run details: host steal, rounds, the workload's named figures,
+wrong outputs and errors. ``--trace 1`` wraps engine functions with spans and
 reports per-layer metrics instead, writing the spans to ``.perfbench/out/``.
 """
 
@@ -32,6 +34,7 @@ T_PROCESS = time.perf_counter()
 
 import argparse  # noqa: E402
 import json  # noqa: E402
+import math  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
 import statistics  # noqa: E402
@@ -49,12 +52,11 @@ OPERATORS = [
     ("q6_forecast_revenue", "relational"),
     ("q_order_lineitem_join_agg", "relational"),
     ("dd_exact", "llm_ops"),
-    ("dd_minhash_lsh", "llm_ops"),
     ("search_bm25", "llm_ops"),
     ("tx_keyword_extract", "llm_ops"),
     ("g_connected_components", "graph"),
 ]
-OPERATOR_PASSES = 2  # passes over OPERATORS per round, each on fresh fixture paths
+OPERATOR_SCALE = "sf0.1"  # fixture row counts (gen.SIZES)
 OPERATOR_MODULES = ("tpch", "dedup", "search", "textops", "graph_ops")
 SERVE_KIND = {
     "read": "point_read", "sql": "sql", "insert": "dml", "update": "dml",
@@ -67,20 +69,16 @@ CDC_COMPACT_THRESHOLD = 2
 BUCKETS = 8
 
 
-def read_steal_jiffies() -> int | None:
-    """Cumulative host-steal jiffies (the 9th field of /proc/stat's cpu line)."""
-    try:
-        with open("/proc/stat") as fh:
-            for line in fh:
-                if line.startswith("cpu "):
-                    return int(line.split()[8])
-    except (OSError, ValueError, IndexError):
-        pass
-    return None
-
-
 def median(xs: list[float]) -> float:
     return statistics.median(xs) if xs else 0.0
+
+
+def gmean_of_medians(lat: dict[str, list[float]]) -> float:
+    """Geometric mean over operation kinds of each kind's median latency:
+    a kind that gets k times slower moves it by k ** (1 / kinds), however
+    rare the kind is in the mix."""
+    meds = [statistics.median(xs) for xs in lat.values() if xs]
+    return math.exp(sum(math.log(m) for m in meds) / len(meds)) if meds else 0.0
 
 
 def parquet_files(entry: dict) -> list[str]:
@@ -117,10 +115,13 @@ class Bench:
             self.tracer = Tracer()
         else:
             self.tracer = NoTracer()
-        self.problems: list[str] = []
+        self.problems: list[str] = []  # wrong outputs
+        self.errors: list[str] = []  # operations that raised
         self.attempted = 0
-        self.op_s: list[float] = []  # one latency per measured operation
-        self.busy_s = 0.0  # time the measured operations took, summed
+        self.failed = 0
+        self.n_ok = 0  # measured operations that succeeded
+        self.lat: dict[str, list[float]] = {}  # latencies by operation kind
+        self.busy_s = 0.0  # time the successful operations took, summed
         self.jobs: dict[str, list[int]] = {}
         self.catalyst = {"analysis": 0.0, "optimization": 0.0, "planning": 0.0}
 
@@ -142,11 +143,19 @@ class Bench:
         self.jobs.setdefault(kind, []).append(n)
         self.spark.sparkContext.setJobGroup("perfbench-idle", "idle")
 
-    def _fixtures(self) -> None:
+    def _ok(self, kind: str, dt: float) -> None:
+        self.n_ok += 1
+        self.busy_s += dt
+        self.lat.setdefault(kind, []).append(dt)
+
+    def _error(self, what: str, exc: Exception) -> None:
+        self.errors.append(f"{what}: {type(exc).__name__}: {str(exc)[:300]}")
+
+    def _fixtures(self, scale: str) -> None:
         from perfbench import gen
 
         with self.tracer.span("setup.inputs"):
-            self.tables = gen.warehouse_tables(self.args.seed)
+            self.tables = gen.warehouse_tables(self.args.seed, scale)
             self.fixture_dir = os.path.join(self.work, "fixture")
             gen.write_tables(self.tables, self.fixture_dir)
 
@@ -208,21 +217,23 @@ class Bench:
             self.cdc_log = gen.CdcLog(self.args.seed)
             self.cdc_src = os.path.join(self.work, "cdc_src")
             self.cdc_bytes = self.cdc_log.write_files(self.cdc_src)
-        self.cdc = {"stream_s": [], "batch_s": [], "read_s": [], "bytes": [], "rows": 0,
-                    "change_bytes": 0}
+            self.cdc_log.write_seed(self.cdc_src + ".seed.parquet")
+        self.cdc = {"stream_s": [], "read_s": [], "bytes": [], "rows": 0, "change_bytes": 0}
         with self.tracer.span("setup.warm"):
             warm = gen.CdcLog(self.args.seed + 1, n_batches=1, batch_rows=200, seed_keys=500)
             src = os.path.join(self.work, "cdc_warm_src")
             warm.write_files(src)
+            warm.write_seed(src + ".seed.parquet")
             self.cdc_round(warm, src, os.path.join(self.work, "cdc_warm"), timed=False)
 
     def _setup_serve(self) -> None:
-        """Warehouse tables, the DuckDB model, one warm call of most kinds."""
+        """Warehouse tables, the DuckDB model and one untimed call of each
+        kind and argument in a round."""
         from perfbench import gen
         from perfbench.checks import ServeModel
         from datalake_on_prem_system_spark.engine import LakeEngine
 
-        self._fixtures()
+        self._fixtures("sf0.01")
         self.engine = LakeEngine(self.spark, os.path.join(self.work, "warehouse"), "db")
         for name in ("orders", "lineitem", "customer", "documents"):
             df = self.spark.read.parquet(os.path.join(self.fixture_dir, f"{name}.parquet"))
@@ -240,23 +251,34 @@ class Bench:
         self.model.record(self.orders.latest_version(), None, None, None)
         self.pick_key, self.serve_rng = gen.key_picker(self.args.seed, gen.N_ORDERS)
         self.next_order = gen.N_ORDERS
-        self.lat: dict[str, list[float]] = {k: [] for k in set(SERVE_KIND.values())}
-        # the first search builds the index; warm-up writes are modelled too
+        self.bucket_lat: dict[str, list[float]] = {k: [] for k in set(SERVE_KIND.values())}
+        # a first round of calls runs 30-70% slower than later ones (JIT and
+        # first-call costs), so every call shape runs once before timing; the
+        # first search builds the index; warm-up writes are modelled too
         with self.tracer.span("setup.warm"):
-            for kind, arg in (("read", None), ("sql", "q3"), ("update", None),
-                              ("time_travel", None), ("diff", 1), ("search", 1)):
+            for kind, arg in dict.fromkeys(gen.SERVE_ROUND):
                 self.serve_call(kind, arg, timed=False)
 
     def _setup_operators(self) -> None:
-        """Fixture tables and one warm-up operator on a copy of them."""
+        """Fixture tables, and one untimed pass over the operators on
+        sf0.001-sized tables: it compiles the same plans, so the timed pass
+        does not pay first-run costs (about 40% of a cold pass)."""
         from datalake_on_prem_system_spark import operators
+        from perfbench import gen
 
-        self._fixtures()
+        self._fixtures(OPERATOR_SCALE)
         self.registry = operators.all_queries()
         self.family_s: dict[str, float] = {}
-        self.ops_out: list[tuple[str, list[str], list[tuple]]] = []
+        # (name, family, seconds, columns, rows) of every operator that ran
+        self.ops_out: list[tuple[str, str, float, list[str], list[tuple]]] = []
         with self.tracer.span("setup.warm"):
-            self.registry["q1_pricing_summary"](self.spark, self._fixture_copy("warm")).collect()
+            warm_dir = os.path.join(self.work, "warm-fixture")
+            gen.write_tables(gen.warehouse_tables(self.args.seed + 1, "sf0.001"), warm_dir)
+            for name, _ in OPERATORS:
+                try:
+                    self.registry[name](self.spark, warm_dir).collect()
+                except Exception as exc:  # noqa: BLE001 - the timed pass counts it
+                    self._error(f"warm-up {name}", exc)
 
     def _fixture_copy(self, tag: str) -> str:
         """Hard-linked copy of the fixtures under a new path, so operators
@@ -313,56 +335,77 @@ class Bench:
     # ------------------------------------------------------------ cdc_ingest
 
     def cdc_round(self, log, src: str, root: str, timed: bool = True) -> None:
+        """Stream ``log`` into a fresh table, read it back and check it. The
+        round's operations (each micro-batch and the read) fail together:
+        the final table is the product of all of them."""
         from perfbench.checks import check_cdc
         from perfbench.gen import CDC_COLUMNS, CDC_ROW_DDL
         from datalake_on_prem_system_spark.lakehouse.table import LakeTable
         from datalake_on_prem_system_spark.streaming.cdc import run_cdc_file_stream
 
+        n_ops = len(log.batches) + 1
         shutil.rmtree(root, ignore_errors=True)
-        table = LakeTable(self.spark, os.path.join(root, "table"))
-        table.create_or_replace(
-            self.spark.createDataFrame(log.seed_rows, CDC_ROW_DDL),
-            properties={
-                "write.merge.mode": "mor",
-                "write.merge.delta.compact-threshold": str(CDC_COMPACT_THRESHOLD),
-            },
-            bucket_by=("id", BUCKETS),
-        )
         n_runs = len(self.run_ids)
-        with self.tracer.span("cdc.stream"):
-            t0 = time.perf_counter()
-            run_cdc_file_stream(
-                self.spark, table, pk="id", row_ddl=CDC_ROW_DDL, src_dir=src,
-                checkpoint_dir=os.path.join(root, "checkpoint"),
-                order_cols=["updated_at"], max_files_per_trigger=1,
+        group = None
+        try:
+            table = LakeTable(self.spark, os.path.join(root, "table"))
+            table.create_or_replace(
+                self.spark.read.parquet(src + ".seed.parquet"),
+                properties={
+                    "write.merge.mode": "mor",
+                    "write.merge.delta.compact-threshold": str(CDC_COMPACT_THRESHOLD),
+                },
+                bucket_by=("id", BUCKETS),
             )
-            stream_s = time.perf_counter() - t0
-        run_id = self.run_ids[n_runs] if len(self.run_ids) > n_runs else None
-        deadline = time.perf_counter() + 10.0  # listener events arrive async
-        while len(self.progress.get(run_id, [])) < len(log.batches) and time.perf_counter() < deadline:
-            time.sleep(0.02)
-        batches = self.progress.get(run_id, [])
-        group = self._job_group("cdc_read") if timed else None
-        with self.tracer.span("cdc.read"):
-            t0 = time.perf_counter()
-            rows = table.read().collect()
-            read_s = time.perf_counter() - t0
-        self._job_count("cdc_read", group)
-        problems = check_cdc([tuple(r[c] for c in CDC_COLUMNS) for r in rows], log)
+            with self.tracer.span("cdc.stream"):
+                t0 = time.perf_counter()
+                run_cdc_file_stream(
+                    self.spark, table, pk="id", row_ddl=CDC_ROW_DDL, src_dir=src,
+                    checkpoint_dir=os.path.join(root, "checkpoint"),
+                    order_cols=["updated_at"], max_files_per_trigger=1,
+                )
+                stream_s = time.perf_counter() - t0
+            run_id = self.run_ids[n_runs] if len(self.run_ids) > n_runs else None
+            deadline = time.perf_counter() + 10.0  # listener events arrive async
+            while (len(self.progress.get(run_id, [])) < len(log.batches)
+                   and time.perf_counter() < deadline):
+                time.sleep(0.02)
+            batches = self.progress.get(run_id, [])
+            group = self._job_group("cdc_read") if timed else None
+            with self.tracer.span("cdc.read"):
+                t0 = time.perf_counter()
+                rows = table.read().collect()
+                read_s = time.perf_counter() - t0
+            self._job_count("cdc_read", group)
+            group = None
+            problems = check_cdc([tuple(r[c] for c in CDC_COLUMNS) for r in rows], log)
+        except Exception as exc:  # noqa: BLE001 - counted as failed, run goes on
+            if group is not None:
+                self._job_count("cdc_read", group)
+            self._error("cdc round", exc)
+            if timed:
+                self.attempted += n_ops
+                self.failed += n_ops
+            return
         if len(batches) != len(log.batches):
             problems.append(f"cdc: {len(batches)} micro-batches reported, expected {len(log.batches)}")
         self.problems.extend(problems)
         if not timed:
             return
+        self.attempted += n_ops
+        if problems:
+            self.failed += n_ops
+            return
         if self.trace and run_id is not None:
             n = len(self.spark.sparkContext.statusTracker().getJobIdsForGroup(run_id))
             self.jobs.setdefault("cdc_batch", []).append(n / max(1, len(batches)))
-        self.attempted += len(log.batches) + 1
-        self.op_s.extend(batches)
+        for b in batches:
+            self.n_ok += 1
+            self.lat.setdefault("micro_batch", []).append(b)
         self.busy_s += stream_s
+        self._ok("read", read_s)
         c = self.cdc
         c["stream_s"].append(stream_s)
-        c["batch_s"].extend(batches)
         c["read_s"].append(read_s)
         c["bytes"].append(sum(
             os.path.getsize(os.path.join(d, f))
@@ -374,8 +417,8 @@ class Bench:
     def cdc_named(self) -> dict:
         c = self.cdc
         return {
-            "cdc_rows_per_s": (c["rows"] / sum(c["stream_s"]), "rows/s"),
-            "cdc_batch_p50_s": (median(c["batch_s"]), "s"),
+            "cdc_rows_per_s": (c["rows"] / sum(c["stream_s"]) if c["stream_s"] else 0.0, "rows/s"),
+            "cdc_batch_p50_s": (median(self.lat.get("micro_batch", [])), "s"),
             "cdc_read_s": (median(c["read_s"]), "s"),
             "cdc_table_bytes": (median(c["bytes"]), "bytes"),
         }
@@ -392,102 +435,112 @@ class Bench:
         bucket = SERVE_KIND[kind]
         problems: list[str] = []
         group = self._job_group(bucket) if timed else None
-        with self.tracer.span(f"serve.{kind}"):
-            t0 = time.perf_counter()
-            if kind == "read":
-                key = self.pick_key()
-                rows = eng.read("orders", filter_col="o_orderkey", filter_val=str(key)).collect()
-                dt = time.perf_counter() - t0
-                want = model.order_row(key)
-                got = [tuple(r[c] for c in checks.ORDER_COLS) for r in rows]
-                msg = checks.same_rows(got, [want] if want else [])
-                if msg:
-                    problems.append(f"read {key}: {msg}")
-            elif kind == "sql":
-                shape = arg
-                date = f"{rng.randrange(1995, 1999)}-{rng.randrange(1, 13):02d}-01"
-                df = eng.query(checks.SQL[shape].format(d=date))
-                rows = df.collect()
-                dt = time.perf_counter() - t0
-                if self.trace:
-                    ph = df._jdf.queryExecution().tracker().phases()
-                    for name in self.catalyst:
-                        opt = ph.get(name)
-                        if opt.isDefined():
-                            self.catalyst[name] += opt.get().durationMs() / 1000.0
-                msg = checks.same_rows([tuple(r) for r in rows], model.sql(shape, date))
-                if msg:
-                    problems.append(f"sql {shape} {date}: {msg}")
-            elif kind in ("insert", "update", "delete"):
-                if kind == "insert":
-                    key = self.next_order
-                    self.next_order += 1
-                    row = {
-                        "o_orderkey": key, "o_custkey": rng.randrange(gen.N_CUSTOMERS),
-                        "o_orderstatus": "O", "o_totalprice": round(rng.uniform(1e3, 5e5), 2),
-                        "o_orderdate": f"199{rng.randrange(5, 9)}-0{rng.randrange(1, 10)}-15",
-                        "o_orderpriority": gen.PRIORITIES[rng.randrange(5)],
-                    }
-                    before = None
-                    eng.insert("orders", {c: str(v) for c, v in row.items()})
-                    dt = time.perf_counter() - t0
-                    model.insert(row)
-                elif kind == "update":
+        try:
+            with self.tracer.span(f"serve.{kind}"):
+                t0 = time.perf_counter()
+                if kind == "read":
                     key = self.pick_key()
-                    sets = {"o_totalprice": round(rng.uniform(1e3, 5e5), 2),
-                            "o_orderstatus": "FOP"[rng.randrange(3)]}
-                    before = model.order_row(key)
-                    eng.update("orders", str(key), {c: str(v) for c, v in sets.items()})
+                    rows = eng.read("orders", filter_col="o_orderkey", filter_val=str(key)).collect()
                     dt = time.perf_counter() - t0
-                    model.update(key, sets)
+                    want = model.order_row(key)
+                    got = [tuple(r[c] for c in checks.ORDER_COLS) for r in rows]
+                    msg = checks.same_rows(got, [want] if want else [])
+                    if msg:
+                        problems.append(f"read {key}: {msg}")
+                elif kind == "sql":
+                    shape = arg
+                    date = f"{rng.randrange(1995, 1999)}-{rng.randrange(1, 13):02d}-01"
+                    df = eng.query(checks.SQL[shape].format(d=date))
+                    rows = df.collect()
+                    dt = time.perf_counter() - t0
+                    if self.trace:
+                        ph = df._jdf.queryExecution().tracker().phases()
+                        for name in self.catalyst:
+                            opt = ph.get(name)
+                            if opt.isDefined():
+                                self.catalyst[name] += opt.get().durationMs() / 1000.0
+                    msg = checks.same_rows([tuple(r) for r in rows], model.sql(shape, date))
+                    if msg:
+                        problems.append(f"sql {shape} {date}: {msg}")
+                elif kind in ("insert", "update", "delete"):
+                    if kind == "insert":
+                        key = self.next_order
+                        self.next_order += 1
+                        row = {
+                            "o_orderkey": key, "o_custkey": rng.randrange(gen.N_CUSTOMERS),
+                            "o_orderstatus": "O", "o_totalprice": round(rng.uniform(1e3, 5e5), 2),
+                            "o_orderdate": f"199{rng.randrange(5, 9)}-0{rng.randrange(1, 10)}-15",
+                            "o_orderpriority": gen.PRIORITIES[rng.randrange(5)],
+                        }
+                        before = None
+                        eng.insert("orders", {c: str(v) for c, v in row.items()})
+                        dt = time.perf_counter() - t0
+                        model.insert(row)
+                    elif kind == "update":
+                        key = self.pick_key()
+                        sets = {"o_totalprice": round(rng.uniform(1e3, 5e5), 2),
+                                "o_orderstatus": "FOP"[rng.randrange(3)]}
+                        before = model.order_row(key)
+                        eng.update("orders", str(key), {c: str(v) for c, v in sets.items()})
+                        dt = time.perf_counter() - t0
+                        model.update(key, sets)
+                    else:
+                        key = self.pick_key()
+                        before = model.order_row(key)
+                        eng.delete("orders", str(key))
+                        dt = time.perf_counter() - t0
+                        model.delete(key)
+                    model.record(self.orders.latest_version(), key, before, model.order_row(key))
+                elif kind == "time_travel":
+                    version = rng.choice(sorted(model.counts))
+                    n = eng.time_travel("orders", version).count()
+                    dt = time.perf_counter() - t0
+                    if n != model.counts[version]:
+                        problems.append(f"time_travel v{version}: {n} rows, model {model.counts[version]}")
+                elif kind == "diff":
+                    versions = sorted(model.counts)
+                    v_new = versions[-1]
+                    v_old = versions[max(0, len(versions) - 1 - arg)]
+                    rows = eng.diff("orders", v_old, v_new).collect()
+                    dt = time.perf_counter() - t0
+                    got = {r["o_orderkey"]: r["status"] for r in rows}
+                    want = model.diff_keys(v_old, v_new)
+                    if got != want:
+                        problems.append(f"diff v{v_old}..v{v_new}: {sorted(got.items())[:4]} vs model {sorted(want.items())[:4]}")
+                elif kind == "changes":
+                    versions = sorted(model.counts)
+                    v_to = versions[-1]
+                    v_from = versions[max(0, len(versions) - 1 - arg)]
+                    rows = eng.changes("orders", v_from, v_to).collect()
+                    dt = time.perf_counter() - t0
+                    got = {(r["o_orderkey"], r["_commit_version"]) for r in rows}
+                    want = model.change_keys(v_from, v_to)
+                    if got != want:
+                        problems.append(f"changes v{v_from}..v{v_to}: {sorted(got)[:4]} vs model {sorted(want)[:4]}")
                 else:
-                    key = self.pick_key()
-                    before = model.order_row(key)
-                    eng.delete("orders", str(key))
+                    words = rng.sample(gen.VOCAB, arg)
+                    rows = eng.search("documents", " ".join(words), top_k=SEARCH_TOP_K).collect()
                     dt = time.perf_counter() - t0
-                    model.delete(key)
-                model.record(self.orders.latest_version(), key, before, model.order_row(key))
-            elif kind == "time_travel":
-                version = rng.choice(sorted(model.counts))
-                n = eng.time_travel("orders", version).count()
-                dt = time.perf_counter() - t0
-                if n != model.counts[version]:
-                    problems.append(f"time_travel v{version}: {n} rows, model {model.counts[version]}")
-            elif kind == "diff":
-                versions = sorted(model.counts)
-                v_new = versions[-1]
-                v_old = versions[max(0, len(versions) - 1 - arg)]
-                rows = eng.diff("orders", v_old, v_new).collect()
-                dt = time.perf_counter() - t0
-                got = {r["o_orderkey"]: r["status"] for r in rows}
-                want = model.diff_keys(v_old, v_new)
-                if got != want:
-                    problems.append(f"diff v{v_old}..v{v_new}: {sorted(got.items())[:4]} vs model {sorted(want.items())[:4]}")
-            elif kind == "changes":
-                versions = sorted(model.counts)
-                v_to = versions[-1]
-                v_from = versions[max(0, len(versions) - 1 - arg)]
-                rows = eng.changes("orders", v_from, v_to).collect()
-                dt = time.perf_counter() - t0
-                got = {(r["o_orderkey"], r["_commit_version"]) for r in rows}
-                want = model.change_keys(v_from, v_to)
-                if got != want:
-                    problems.append(f"changes v{v_from}..v{v_to}: {sorted(got)[:4]} vs model {sorted(want)[:4]}")
-            else:
-                words = rng.sample(gen.VOCAB, arg)
-                rows = eng.search("documents", " ".join(words), top_k=SEARCH_TOP_K).collect()
-                dt = time.perf_counter() - t0
-                problems.extend(checks.check_search(
-                    [(r["doc_id"], r["text"], r["lang"], r["source"], r["n_chars"]) for r in rows],
-                    words, SEARCH_TOP_K, model.search_count(words),
-                ))
+                    problems.extend(checks.check_search(
+                        [(r["doc_id"], r["text"], r["lang"], r["source"], r["n_chars"]) for r in rows],
+                        words, SEARCH_TOP_K, model.search_count(words),
+                    ))
+        except Exception as exc:  # noqa: BLE001 - counted as failed, run goes on
+            self._error(f"serve {kind}", exc)
+            if timed:
+                self._job_count(bucket, group)
+                self.attempted += 1
+                self.failed += 1
+            return
         self.problems.extend(problems)
         if timed:
             self._job_count(bucket, group)
             self.attempted += 1
-            self.op_s.append(dt)
-            self.busy_s += dt
-            self.lat[bucket].append(dt)
+            if problems:
+                self.failed += 1
+                return
+            self._ok(kind, dt)
+            self.bucket_lat[bucket].append(dt)
 
     def serve_round(self, round_no: int) -> None:
         from perfbench import gen
@@ -497,39 +550,41 @@ class Bench:
 
     def serve_named(self) -> dict:
         return {
-            "serve_ops_per_s": (len(self.op_s) / self.busy_s, "1/s"),
-            **{f"{k}_p50_s": (median(self.lat[k]), "s")
+            "serve_ops_per_s": (self.n_ok / self.busy_s if self.busy_s else 0.0, "1/s"),
+            **{f"{k}_p50_s": (median(self.bucket_lat[k]), "s")
                for k in ("point_read", "sql", "dml", "history", "search")},
         }
 
     # ------------------------------------------------------------ operator_batch
 
     def operator_round(self, round_no: int) -> None:
-        for p in range(OPERATOR_PASSES):
-            self.operator_pass(self._fixture_copy(f"{round_no}-{p}"))
-
-    def operator_pass(self, sf_dir: str) -> None:
+        """One pass over OPERATORS on fresh fixture paths."""
+        sf_dir = self._fixture_copy(str(round_no))
         for name, family in OPERATORS:
             fn = self.registry[name]
             module = fn.__module__.rsplit(".", 1)[-1]
             group = self._job_group(f"operator.{module}")
-            with self.tracer.span(f"operators.{module}.query", query=name):
-                t0 = time.perf_counter()
-                with self.tracer.span(f"operators.{module}.build"):
-                    df = fn(self.spark, sf_dir)
-                with self.tracer.span(f"operators.{module}.collect"):
-                    rows = [tuple(r) for r in df.collect()]
-                dt = time.perf_counter() - t0
-            self._job_count(f"operator.{module}", group)
             self.attempted += 1
-            self.op_s.append(dt)
-            self.busy_s += dt
-            self.family_s[family] = self.family_s.get(family, 0.0) + dt
-            self.ops_out.append((name, df.columns, rows))
+            try:
+                with self.tracer.span(f"operators.{module}.query", query=name):
+                    t0 = time.perf_counter()
+                    with self.tracer.span(f"operators.{module}.build"):
+                        df = fn(self.spark, sf_dir)
+                    with self.tracer.span(f"operators.{module}.collect"):
+                        rows = [tuple(r) for r in df.collect()]
+                    dt = time.perf_counter() - t0
+            except Exception as exc:  # noqa: BLE001 - counted as failed, run goes on
+                self._error(name, exc)
+                self.failed += 1
+                continue
+            finally:
+                self._job_count(f"operator.{module}", group)
+            self.ops_out.append((name, family, dt, df.columns, rows))
 
     def check_operators(self) -> None:
         """Compare every collected output with its oracle SQL run by DuckDB
-        over the same fixture files (outside the timed window)."""
+        over the same fixture files (outside the timed window); only the
+        operators that pass count towards the timings."""
         import duckdb
 
         from perfbench.checks import check_operator
@@ -541,17 +596,22 @@ class Bench:
             name = f[: -len(".parquet")]
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{self.fixture_dir}/{f}'")
         oracle = {}
-        for name, columns, rows in self.ops_out:
+        for name, family, dt, columns, rows in self.ops_out:
             if name not in oracle:
                 res = con.execute(oracle_sql[name])
                 oracle[name] = ([d[0] for d in res.description], res.fetchall())
-            self.problems.extend(check_operator(name, columns, rows, oracle[name]))
+            problems = check_operator(name, columns, rows, oracle[name])
+            self.problems.extend(problems)
+            if problems:
+                self.failed += 1
+                continue
+            self._ok(name, dt)
+            self.family_s[family] = self.family_s.get(family, 0.0) + dt
 
     def operator_named(self) -> dict:
-        passes = self.rounds * OPERATOR_PASSES
         return {
-            "batch_total_s": (self.busy_s / passes, "s"),
-            **{f"{fam}_s": (self.family_s[fam] / passes, "s")
+            "batch_total_s": (self.busy_s / self.rounds, "s"),
+            **{f"{fam}_s": (self.family_s.get(fam, 0.0) / self.rounds, "s")
                for fam in ("relational", "llm_ops", "graph")},
         }
 
@@ -579,8 +639,8 @@ class Bench:
     def end_to_end(self) -> dict:
         m = {
             "setup_s": (self.setup_s, "s"),
-            "ops_per_s": (len(self.op_s) / self.busy_s, "1/s"),
-            "op_p50_s": (median(self.op_s), "s"),
+            "ops_per_s": (self.n_ok / self.busy_s if self.busy_s else 0.0, "1/s"),
+            "op_p50_gmean_s": (gmean_of_medians(self.lat), "s"),
         }
         return {k: {"value": v, "unit": u} for k, (v, u) in m.items()}
 
@@ -648,7 +708,9 @@ class Bench:
         named = {"cdc_ingest": self.cdc_named, "lake_serve": self.serve_named,
                  "operator_batch": self.operator_named}[wl]()
         metrics = self.per_layer() if self.trace else self.end_to_end()
-        steal1 = read_steal_jiffies()
+        from bench import _read_steal_jiffies
+
+        steal1 = _read_steal_jiffies()
         steal = None if self.steal_start is None or steal1 is None else steal1 - self.steal_start
         run_s = time.perf_counter() - T_PROCESS
         detail = {
@@ -657,7 +719,8 @@ class Bench:
             "setup_s": round(self.setup_s, 3), "steal_jiffies": steal,
             "steal_cores": None if steal is None else round(steal / 100.0 / run_s, 3),
             "named": {k: {"value": v, "unit": u} for k, (v, u) in named.items()},
-            "problems": self.problems[:20],
+            "failed": self.failed, "problems": self.problems[:20],
+            "errors": self.errors[:20],
         }
         if self.trace:
             out = os.path.join(ROOT, ".perfbench", "out")
@@ -669,9 +732,7 @@ class Bench:
         return {
             "correct": not self.problems,
             "attempted": self.attempted,
-            # an operation that raises ends the run with a traceback; a
-            # wrong output is a problem and makes `correct` false
-            "failed": 0,
+            "failed": self.failed,
             "metrics": metrics,
         }
 
@@ -707,13 +768,13 @@ def parse_args(argv=None):
 
 
 def main(argv=None) -> int:
-    steal_start = read_steal_jiffies()
     args = parse_args(argv)
     try:
-        import datalake_on_prem_system_spark  # noqa: F401
+        from bench import _read_steal_jiffies
     except ImportError as exc:
         print(f"perfbench: cannot import the engine from {ROOT}: {exc}", file=sys.stderr)
         return 2
+    steal_start = _read_steal_jiffies()
     work = os.path.join(ROOT, ".perfbench", f"work-{os.getpid()}")
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     # operators and Spark write their scratch files inside the checkout

@@ -153,3 +153,24 @@ def test_operator_check_rejects_altered_values_and_columns():
     assert checks.check_operator("q", ["a", "b"], [(1, 0.5), (2, 1.6)], oracle)
     assert checks.check_operator("q", ["a", "c"], [(1, 0.5), (2, 1.5)], oracle)
     assert checks.check_operator("q", ["a", "b"], [(1, 0.5)], oracle)
+
+
+def test_gmean_of_medians_moves_with_every_kind():
+    from perfbench.run import gmean_of_medians
+
+    lat = {"read": [0.5] * 8 + [9.0], "sql": [0.4, 0.4, 0.6], "search": [0.9]}
+    base = gmean_of_medians(lat)
+    assert base == pytest.approx((0.5 * 0.4 * 0.9) ** (1 / 3))
+    # the rarest kind twice as slow moves it by 2 ** (1 / kinds)
+    slow = {**lat, "search": [1.8]}
+    assert gmean_of_medians(slow) / base == pytest.approx(2 ** (1 / 3))
+
+
+def test_cdc_seed_file_holds_the_seed_rows(tmp_path):
+    import pyarrow.parquet as pq
+
+    log = gen.CdcLog(9, n_batches=1, batch_rows=10, seed_keys=50)
+    log.write_seed(str(tmp_path / "seed.parquet"))
+    tbl = pq.read_table(str(tmp_path / "seed.parquet"))
+    assert tbl.column_names == gen.CDC_COLUMNS
+    assert [tuple(r.values()) for r in tbl.to_pylist()] == log.seed_rows
