@@ -48,7 +48,6 @@ WORKLOADS = ("cdc_ingest", "lake_serve", "operator_batch")
 # (name, family); family subtotals are reported per run
 OPERATORS = [
     ("q1_pricing_summary", "relational"),
-    ("q3_top_revenue_orders", "relational"),
     ("q6_forecast_revenue", "relational"),
     ("q_order_lineitem_join_agg", "relational"),
     ("dd_exact", "llm_ops"),
