@@ -227,19 +227,8 @@ R6_SET = {
     "lh_incremental_rollup",
 }
 
-# ---- long-tail rotation (round-13 verdict #6): the headliner list grows
-# ~20 names/round, so measuring ALL of them every round pushes the bench
-# past its wall-time budget. Rotation measures the FIXED core — the
-# r6 comparison set plus THIS round's additions (the block directly above
-# R6_SET) — and a deterministic ~50-name slice of the remaining tail,
-# advanced by ROTATION_OFFSET. Rotation is OPT-IN (SPARK_GRAFT_BENCH_ROTATE=1):
-# the optimization-round driver contract forbids removing entries from the
-# bench "queries" map round-over-round, and a rotated run would drop the
-# ~36 r13 entries outside its slice. Default = exhaustive (every headliner
-# measured every run); rotation stays available for quick local iteration.
-# ONE bookkeeping site per round: replace this list (and bump
-# ROTATION_OFFSET) — the names are appended to HEADLINERS below, so a
-# round's additions are always in the measured fixed core.
+# this round's additions, appended to HEADLINERS below so they are always
+# measured: replace this list each round
 ROUND_NEW = [
     # round-14: retraction IVM (signed Z-set deltas through a
     # delete/update CDC batch), the two-sided streaming join view, DV
@@ -255,21 +244,6 @@ ROUND_NEW = [
     "w_rolling_median", "tx_burstiness",
 ]
 HEADLINERS += [q for q in ROUND_NEW if q not in HEADLINERS]
-ROTATION_OFFSET = 0  # bump by 1 each round
-ROTATE_N = 50
-
-if os.environ.get("SPARK_GRAFT_BENCH_ROTATE"):
-    _fixed = [q for q in HEADLINERS if q in R6_SET or q in ROUND_NEW]
-    _pool = [q for q in HEADLINERS if q not in R6_SET and q not in ROUND_NEW]
-    if _pool:
-        _start = (ROTATION_OFFSET * ROTATE_N) % len(_pool)
-        _slice = [
-            _pool[(_start + i) % len(_pool)]
-            for i in range(min(ROTATE_N, len(_pool)))
-        ]
-    else:
-        _slice = []
-    HEADLINERS = _fixed + _slice
 
 # opt-in extra headliners (comma-separated registered query names) —
 # appended, so the default 22-query headline_total stays comparable

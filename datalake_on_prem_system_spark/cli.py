@@ -13,13 +13,23 @@ straight to LakeEngine).
     python -m datalake_on_prem_system_spark.cli travel mytable <version>
     python -m datalake_on_prem_system_spark.cli diff mytable <v_old> <v_new>
     python -m datalake_on_prem_system_spark.cli search mytable "query words"
+    python -m datalake_on_prem_system_spark.cli repl   # one verb per line on stdin
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import shlex
 import sys
+
+from pyspark.errors import AnalysisException
+
+# errors in what the user typed: the one-shot CLI prints them and exits 1,
+# the repl prints them and reads the next line. LookupError covers
+# ExpiredVersionError (unknown table/version); AnalysisException covers SQL
+# that names an unknown table or column.
+_USER_ERRORS = (ValueError, LookupError, AnalysisException)
 
 
 def _kv(pairs: list[str]) -> dict[str, str]:
@@ -39,6 +49,7 @@ def main(argv: list[str] | None = None) -> int:
     sub = ap.add_subparsers(dest="verb", required=True)
 
     sub.add_parser("tables")
+    sub.add_parser("repl", help="read verbs from stdin, one per line, against one engine")
     p = sub.add_parser("ingest")
     p.add_argument("csv"); p.add_argument("table")
     p.add_argument("--mode", default="create", choices=["create", "append", "upsert"])
@@ -74,13 +85,42 @@ def main(argv: list[str] | None = None) -> int:
 
     eng = LakeEngine(get_spark(app_name="lake_cli"), args.warehouse)
     n = args.limit_show
+    if args.verb == "repl":
+        return _repl(ap, eng, n)
 
     try:
         return _dispatch(args, eng, n)
-    except (ValueError, LookupError) as exc:
-        # LookupError covers ExpiredVersionError (unknown table/version)
+    except _USER_ERRORS as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 1
+
+
+def _repl(ap: argparse.ArgumentParser, eng, n: int) -> int:
+    """Interactive loop over the verb table: each line is shlex-split and
+    run through the same parser and ``_dispatch`` on one engine. A bad
+    line prints its error and the loop goes on; a blank line does nothing
+    (it never repeats the last verb); EOF ends it."""
+    prompt = "lake> " if sys.stdin.isatty() else ""
+    while True:
+        try:
+            line = input(prompt)
+        except EOFError:
+            return 0
+        try:
+            argv = shlex.split(line)
+            if not argv:
+                continue
+            args = ap.parse_args(argv)
+            if args.verb == "repl":
+                raise ValueError("already in the repl")
+            _dispatch(args, eng, n)
+        except SystemExit as exc:
+            # argparse has printed its own usage error; a verb's usage
+            # check raises SystemExit with the message
+            if isinstance(exc.code, str):
+                print(f"error: {exc.code}", file=sys.stderr)
+        except _USER_ERRORS as exc:
+            print(f"error: {exc}", file=sys.stderr)
 
 
 def _dispatch(args, eng, n: int) -> int:

@@ -20,6 +20,7 @@ lake_cli.py:122-157, lake_shell.py:19-316) onto the Spark-native substrate:
 
 from __future__ import annotations
 
+import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,18 +40,9 @@ from .sources.csv_ingest import ingest_csv as _ingest_csv
 
 
 class LakeEngine:
-    def __init__(
-        self,
-        spark: SparkSession,
-        warehouse: str,
-        namespace: str = "trino_db",
-        table_format=None,
-    ):
-        """``table_format``: optional ``(spark, path) -> TableFormat``
-        factory (default the bundled ``LakeTable``); the engine only uses
-        the protocol surface, so any binding drops in."""
+    def __init__(self, spark: SparkSession, warehouse: str, namespace: str = "trino_db"):
         self.spark = spark
-        self.catalog = LakeCatalog(spark, warehouse, namespace, table_format=table_format)
+        self.catalog = LakeCatalog(spark, warehouse, namespace)
         self.catalog.create_namespace()
         # (table root, commit version) → materialized search-index path.
         # Guarded by a lock: the HTTP facade serves this engine from a
@@ -88,10 +80,8 @@ class LakeEngine:
         # commit — a write landing between two independent 'latest'
         # resolutions would otherwise type the filter literal against a
         # different schema than the scan it filters
-        commit_at = getattr(tbl, "commit_at", None)
-        commit = commit_at(version, fallback_to_latest=True) if commit_at else None
-        df = tbl.read(version=version, fallback_to_latest=True, commit=commit) \
-            if commit is not None else tbl.read(version=version, fallback_to_latest=True)
+        commit = tbl.commit_at(version, fallback_to_latest=True)
+        df = tbl.read(version=version, fallback_to_latest=True, commit=commit)
         # derive the pk from THIS snapshot's columns: the latest schema may
         # have columns an old version lacks (append-based evolution), and it
         # avoids a second table read
@@ -114,22 +104,16 @@ class LakeEngine:
                 # instead of letting ANSI throw CAST_INVALID_INPUT at
                 # execution time deep in a Spark job
                 return df.filter(F.lit(False)).select(*(columns or df.columns))
-            cond = F.col(filter_col) == F.lit(typed)
-            read_where = getattr(tbl, "read_where", None)
-            if read_where is not None:
-                # bucket-pruned point path: a pk-equality filter resolves
-                # only the bucket holding the key (P10 at O(1 bucket));
-                # non-pk filters fall through inside read_where unchanged;
-                # `commit` pins the same snapshot typing was derived from —
-                # passed only when this binding produced one (a binding
-                # without commit_at keeps its pre-composite read_where
-                # signature and must not see the kwarg)
-                kw = {"commit": commit} if commit is not None else {}
-                df = read_where(
-                    cond, version=version, fallback_to_latest=True, **kw
-                )
-            else:
-                df = df.filter(cond)
+            # bucket-pruned point path: a pk-equality filter resolves only
+            # the bucket holding the key (P10 at O(1 bucket)); non-pk
+            # filters fall through inside read_where unchanged; `commit`
+            # pins the same snapshot typing was derived from
+            df = tbl.read_where(
+                F.col(filter_col) == F.lit(typed),
+                version=version,
+                fallback_to_latest=True,
+                commit=commit,
+            )
         if columns:
             df = df.select(*columns)
         if limit is not None:
@@ -294,23 +278,11 @@ class LakeEngine:
 
     def files(self, table: str, version: int | str | None = None) -> DataFrame:
         """$files metadata table: the snapshot's manifest entries."""
-        t = self.catalog.table(table)
-        fn = getattr(t, "files", None)
-        if fn is None:
-            raise NotImplementedError(
-                f"table format {type(t).__name__} does not expose a files table"
-            )
-        return fn(version=version)
+        return self.catalog.table(table).files(version=version)
 
     def partitions(self, table: str, version: int | str | None = None) -> DataFrame:
         """$partitions metadata table: per-partition file/row counts."""
-        t = self.catalog.table(table)
-        fn = getattr(t, "partitions", None)
-        if fn is None:
-            raise NotImplementedError(
-                f"table format {type(t).__name__} does not expose a partitions table"
-            )
-        return fn(version=version)
+        return self.catalog.table(table).partitions(version=version)
 
     def time_travel(self, table: str, version: int | str) -> DataFrame:
         """Snapshot read by version number OR tag name (digit strings
@@ -321,13 +293,7 @@ class LakeEngine:
     def tag(self, table: str, name: str, version: int | None = None) -> int:
         """Name a version (GC root — survives expire_snapshots until the
         tag is deleted). Returns the resolved version."""
-        t = self.catalog.table(table)
-        tag = getattr(t, "tag", None)
-        if tag is None:
-            raise NotImplementedError(
-                f"table format {type(t).__name__} does not support tags"
-            )
-        return tag(name, version=version)
+        return self.catalog.table(table).tag(name, version=version)
 
     def diff(self, table: str, v_old: int, v_new: int) -> DataFrame:
         t = self.catalog.table(table)
@@ -347,71 +313,44 @@ class LakeEngine:
     def restore(self, table: str, version: int) -> None:
         """RESTORE the table to a historical version as a NEW commit —
         O(metadata) rollback of a botched write, with the bad interval
-        still time-travelable. Bindings without a restore operation (the
-        TableFormat protocol doesn't require one) raise."""
-        t = self.catalog.table(table)
-        restore = getattr(t, "restore", None)
-        if restore is None:
-            raise NotImplementedError(
-                f"table format {type(t).__name__} does not support restore"
-            )
-        restore(version)
+        still time-travelable."""
+        self.catalog.table(table).restore(version)
 
     def set_partitioning(self, table: str, partition_by: list[str] | None) -> int:
         """Partition evolution: O(metadata) layout change applied by the
         next compaction; returns the new version."""
-        t = self.catalog.table(table)
-        fn = getattr(t, "set_partitioning", None)
-        if fn is None:
-            raise NotImplementedError(
-                f"table format {type(t).__name__} does not support partition evolution"
-            )
-        return fn(partition_by).version
-
-    def _branch_capable(self, table: str):
-        t = self.catalog.table(table)
-        if getattr(t, "create_branch", None) is None:
-            raise NotImplementedError(
-                f"table format {type(t).__name__} does not support branches"
-            )
-        return t
+        return self.catalog.table(table).set_partitioning(partition_by).version
 
     def create_branch(self, table: str, name: str, version: int | None = None) -> int:
         """Fork a writable branch off ``table`` (O(metadata); shares the
         table's data dir). Returns the fork version."""
-        t = self._branch_capable(table)
+        t = self.catalog.table(table)
         return t.create_branch(name, version=version).latest_version()
 
     def branches(self, table: str) -> dict[str, int]:
-        return self._branch_capable(table).branches()
+        return self.catalog.table(table).branches()
 
     def read_branch(
         self, table: str, name: str, version: int | str | None = None
     ) -> DataFrame:
-        return self._branch_capable(table).branch_table(name).read(version=version)
+        return self.catalog.table(table).branch_table(name).read(version=version)
 
     def merge_branch(self, table: str, name: str) -> int:
         """Fast-forward merge of a branch back into the main chain; returns
         the merge commit's version. Raises BranchConflictError if the main
         chain advanced past the fork."""
-        return self._branch_capable(table).merge_branch(name).version
+        return self.catalog.table(table).merge_branch(name).version
 
     def delete_branch(self, table: str, name: str) -> bool:
-        return self._branch_capable(table).delete_branch(name)
+        return self.catalog.table(table).delete_branch(name)
 
     def clone(self, table: str, dest_table: str, version: int | None = None) -> None:
         """Zero-copy shallow clone of ``table`` (optionally as of
         ``version``) into ``dest_table`` in the same namespace — O(metadata)
-        dev/test forks of any-size tables. Bindings without a clone
-        operation (the TableFormat protocol doesn't require one) raise."""
-        src = self.catalog.table(table)
-        dest = self.catalog.table(dest_table)
-        clone_to = getattr(src, "clone_to", None)
-        if clone_to is None:
-            raise NotImplementedError(
-                f"table format {type(src).__name__} does not support clone"
-            )
-        clone_to(dest.root, version=version)
+        dev/test forks of any-size tables."""
+        self.catalog.table(table).clone_to(
+            self.catalog.table(dest_table).root, version=version
+        )
 
     # ------------------------------------------------------------- search
 
@@ -433,8 +372,6 @@ class LakeEngine:
         dropped from the cache but left ON DISK — a still-in-flight lazy
         search DataFrame may read them; ``expire_snapshots`` GCs them with
         their commits."""
-        import os
-
         t = self.catalog.table(table)
         version = t.latest_version()
         df = t.read(version=version) if version is not None else t.read()
@@ -470,8 +407,9 @@ class LakeEngine:
         """E1–E5: numeric fast path → ranked all-words/phrase search over
         the MATERIALIZED inverted index (token postings; all-words =
         posting intersection, phrase verified on candidates only) → rejoin
-        to authoritative rows (api_poc.py:396-415). Flat index scan remains
-        the fallback when postings are absent (older index builds)."""
+        to authoritative rows (api_poc.py:396-415). A missing or broken
+        posting index raises. A query with no tokens has no postings to
+        intersect and is ranked by the flat index scan."""
         if query.isdigit():  # P8 numeric-id fast path
             df = self.catalog.table(table).read()
             pk = find_id_col(df.columns)
@@ -480,22 +418,12 @@ class LakeEngine:
         # commit landing mid-request must not mix version-N idx/base frames
         # with version-N+1 postings (round-7 review catch)
         idx, df, pk, version = self._search_index(table)
-        scored = None
-        try:
-            import os
-
-            base = os.path.join(self.catalog.table(table).root, "_search_index")
-            postings = self.spark.read.parquet(
-                os.path.join(base, f"{version}_postings.parquet")
-            )
-            dict_df = self.spark.read.parquet(
-                os.path.join(base, f"{version}_tokens.parquet")
-            )
-            scored = ranked_hits_postings(
-                idx, postings, dict_df, query, pk, require_all=True
-            )
-        except Exception:
-            scored = None
+        base = os.path.join(self.catalog.table(table).root, "_search_index")
+        postings = self.spark.read.parquet(
+            os.path.join(base, f"{version}_postings.parquet")
+        )
+        dict_df = self.spark.read.parquet(os.path.join(base, f"{version}_tokens.parquet"))
+        scored = ranked_hits_postings(idx, postings, dict_df, query, pk, require_all=True)
         if scored is None:
             scored = idx.filter(all_words_predicate(F.col("text"), query)).select(
                 pk, phrase_boost_score(F.col("text"), query).alias("score")

@@ -12,13 +12,10 @@ jars needed), providing the same user-visible semantics:
 
 from .catalog import LakeCatalog
 from .diff import snapshot_diff
-from .format import DeltaTableFormat, TableFormat
 from .table import LakeTable
 
 __all__ = [
-    "DeltaTableFormat",
     "LakeCatalog",
     "LakeTable",
-    "TableFormat",
     "snapshot_diff",
 ]

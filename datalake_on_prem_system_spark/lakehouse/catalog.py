@@ -9,31 +9,17 @@ table-name validation (api_poc.py:304 ``isidentifier``).
 from __future__ import annotations
 
 import os
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .table import LakeTable
 
-if TYPE_CHECKING:
-    from .format import TableFormat
-
 
 class LakeCatalog:
-    def __init__(
-        self,
-        spark: SparkSession,
-        warehouse: str,
-        namespace: str = "db",
-        table_format=None,
-    ):
-        """``table_format`` is a ``(spark, path) -> TableFormat`` factory —
-        the seam that swaps the bundled ``LakeTable`` for a connector-backed
-        binding (``DeltaTableFormat``) without touching anything above."""
+    def __init__(self, spark: SparkSession, warehouse: str, namespace: str = "db"):
         self.spark = spark
         self.warehouse = warehouse
         self.namespace = namespace
-        self.table_format = table_format or LakeTable
 
     def _ns_dir(self) -> str:
         return os.path.join(self.warehouse, self.namespace)
@@ -48,8 +34,8 @@ class LakeCatalog:
             raise ValueError(f"invalid table name: {name!r}")
         return name
 
-    def table(self, name: str) -> "TableFormat":
-        return self.table_format(
+    def table(self, name: str) -> LakeTable:
+        return LakeTable(
             self.spark, os.path.join(self._ns_dir(), self._validate(name))
         )
 
@@ -61,7 +47,7 @@ class LakeCatalog:
         return sorted(
             d
             for d in os.listdir(ns)
-            if self.table_format(self.spark, os.path.join(ns, d)).exists()
+            if LakeTable(self.spark, os.path.join(ns, d)).exists()
         )
 
     def describe(self, name: str) -> DataFrame:

@@ -48,6 +48,10 @@ _PR_TOP_K = 50
 # damping 0.85 as the exact rational 17/20 — both engines apply it as
 # integer multiply-then-div, so no float enters the recurrence
 _PR_D_NUM, _PR_D_DEN = 17, 20
+# rank to 9 places by integer half-up rounding of the exact rank_pico (one
+# unit of the 9th place is 1000 picounits); a double round(rq / 1e12, 9)
+# breaks a ...500 tie differently in Spark and DuckDB
+_PR_RANK = "CAST((rq + 500) {div} 1000 AS DOUBLE) / 1e9"
 
 
 def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,7 +122,7 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("node div 2").alias("entity_key"),
             F.col("deg").alias("degree"),
             F.col("rq").alias("rank_pico"),
-            F.round(F.col("rq") / _PR_SCALE, 9).alias("rank"),
+            F.expr(_PR_RANK.format(div="div")).alias("rank"),
         )
         .orderBy(F.desc("rank_pico"), F.asc("node_type"), F.asc("entity_key"))
         .limit(_PR_TOP_K)
@@ -161,7 +165,7 @@ def _pagerank_oracle_sql() -> str:
                node // 2 AS entity_key,
                CAST(deg AS BIGINT) AS degree,
                CAST(rq AS BIGINT) AS rank_pico,
-               round(rq / {s}.0, 9) AS rank
+               {_PR_RANK.format(div='//')} AS rank
         FROM r{_PR_ITERS}
         ORDER BY rank_pico DESC, node_type ASC, entity_key ASC
         LIMIT {_PR_TOP_K}

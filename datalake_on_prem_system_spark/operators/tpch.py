@@ -60,9 +60,18 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
+            # exact DECIMAL sum, as in q7: a double sum of an order whose
+            # revenue ends in a half cent rounds by summation order
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+                        "decimal(18,4)"
+                    )
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
         .limit(10)
@@ -322,7 +331,8 @@ ORACLE = {
     """,
     "q3_top_revenue_orders": """
         SELECT o_orderkey, o_orderdate, o_orderpriority,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+                                   AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
         FROM customer, orders, lineitem
         WHERE c_mktsegment = 'BUILDING'
           AND c_custkey = o_custkey

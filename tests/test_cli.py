@@ -141,3 +141,33 @@ def test_cli_partition_evolution(spark, tmp_path, capsys):
     assert main(["--warehouse", wh, "read", "items"]) == 0
     out = capsys.readouterr().out
     assert "10.5" in out and "30.5" in out
+
+
+def test_cli_repl_runs_verbs_from_stdin(spark, tmp_path, capsys, monkeypatch):
+    """`lake repl` runs one verb per line through the CLI's parser on one
+    engine: a bad verb or bad SQL prints an error and the loop goes on, and
+    a blank line repeats nothing."""
+    import io
+
+    csv = tmp_path / "in.csv"
+    csv.write_text("id,name\n1,alpha\n2,beta\n")
+    script = "\n".join([
+        "tables",
+        f"ingest {csv} items",
+        "read items",
+        "frobnicate items",
+        "",
+        'sql "SELECT * FROM no_such_table"',
+        "insert items id=3 name='gamma ray'",
+        "read items --columns name",
+    ]) + "\n"
+    monkeypatch.setattr("sys.stdin", io.StringIO(script))
+    assert main(["--warehouse", str(tmp_path / "wh"), "repl"]) == 0
+    cap = capsys.readouterr()
+    assert cap.err.count("invalid choice: 'frobnicate'") == 1
+    assert "TABLE_OR_VIEW_NOT_FOUND" in cap.err
+    assert cap.out.count("table now has 2 rows") == 1
+    assert cap.out.count("inserted 1 row") == 1
+    # both reads ran; only the second sees the inserted row
+    assert cap.out.count("alpha") == 2
+    assert cap.out.count("gamma ray") == 1

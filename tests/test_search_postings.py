@@ -106,12 +106,18 @@ def test_empty_query_returns_none_for_fallback(spark):
     )
 
 
-def test_engine_search_uses_postings_and_survives_their_loss(spark, tmp_path):
-    """LakeEngine.search serves from the materialized inverted index and
-    degrades to the flat index scan when the posting dirs are missing
-    (older index build) — same results either way."""
+def test_engine_search_uses_postings_and_raises_on_their_loss(
+    spark, tmp_path, monkeypatch
+):
+    """LakeEngine.search serves from the materialized inverted index; a
+    missing or broken posting index raises instead of turning into a flat
+    scan. A query with no tokens still ranks every document."""
     import shutil
 
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from datalake_on_prem_system_spark import engine as engine_mod
     from datalake_on_prem_system_spark.engine import LakeEngine
     from datalake_on_prem_system_spark.plans import capture_plan
 
@@ -127,14 +133,24 @@ def test_engine_search_uses_postings_and_survives_their_loss(spark, tmp_path):
     # all-words docs only — substring semantics include 'scanning'/'tablescan'
     assert want == {1, 2, 3, 6, 7}
 
-    # simulate a pre-postings index: drop the posting + dict dirs
+    # no tokens: nothing to intersect, the flat scan ranks every document
+    assert eng.search("docs", "   ", top_k=5).count() == min(5, len(_DOCS))
+    assert eng.search("docs", "   ").count() == len(_DOCS)
+
+    def broken(*a, **k):
+        raise RuntimeError("corrupt posting index")
+
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "ranked_hits_postings", broken)
+        with pytest.raises(RuntimeError, match="corrupt posting index"):
+            eng.search("docs", "table scan")
+
     root = eng.catalog.table("docs").root
     v = eng.catalog.table("docs").latest_version()
     for leaf in (f"{v}_postings.parquet", f"{v}_tokens.parquet"):
         shutil.rmtree(f"{root}/_search_index/{leaf}")
-    out2 = eng.search("docs", "table scan")
-    assert "_postings.parquet" not in capture_plan(out2)
-    assert {r.doc_id for r in out2.collect()} == want
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        eng.search("docs", "table scan")
 
 
 def test_duplicate_pk_key_searches_per_key_on_both_paths(spark, tmp_path):
@@ -172,9 +188,12 @@ def test_duplicate_pk_key_searches_per_key_on_both_paths(spark, tmp_path):
 
 def test_engine_search_on_duplicate_pk_table(spark, tmp_path):
     """LakeEngine.search on a duplicate-pk table: the key matches when its
-    rows jointly hold all words; primary (postings) and fallback (flat)
-    agree; every row of the matched key is returned."""
+    rows jointly hold all words; every row of the matched key is returned;
+    without the posting dirs the search raises."""
     import shutil
+
+    import pytest
+    from pyspark.errors import AnalysisException
 
     from datalake_on_prem_system_spark.engine import LakeEngine
 
@@ -192,8 +211,8 @@ def test_engine_search_on_duplicate_pk_table(spark, tmp_path):
     v = eng.catalog.table("dup").latest_version()
     for leaf in (f"{v}_postings.parquet", f"{v}_tokens.parquet"):
         shutil.rmtree(f"{root}/_search_index/{leaf}")
-    out2 = eng.search("dup", "spark merge").collect()
-    assert {(r.rec_id, r.body) for r in out2} == {(7, "alpha spark"), (7, "merge beta")}
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        eng.search("dup", "spark merge")
 
 
 def test_incremental_posting_sync_matches_full_rebuild(spark, tmp_path):

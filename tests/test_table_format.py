@@ -1,58 +1,16 @@
-"""The TableFormat seam: both bindings — the bundled LakeTable and the
-delta-spark DeltaTableFormat — must satisfy the protocol, and the
-engine/catalog surface must stay within it. Runtime conformance for the
-Delta binding importorskips (delta-spark is absent in this sandbox);
-signature-level conformance runs everywhere for BOTH bindings."""
+"""LakeTable surface: a create/append/merge/DML/time-travel round trip,
+the engine facade over it, and stats-based file skipping."""
 
 from __future__ import annotations
 
-import inspect
-
-import pytest
-
 from datalake_on_prem_system_spark.lakehouse import LakeTable
-from datalake_on_prem_system_spark.lakehouse.format import DeltaTableFormat, TableFormat
-
-BINDINGS = [LakeTable, DeltaTableFormat]
 
 
-def test_laketable_implements_tableformat(spark, tmp_path):
-    table = LakeTable(spark, str(tmp_path / "t"))
-    assert isinstance(table, TableFormat)
-
-
-def test_delta_binding_implements_tableformat(spark, tmp_path):
-    pytest.importorskip("delta")
-    table = DeltaTableFormat(spark, str(tmp_path / "t"))
-    assert isinstance(table, TableFormat)
-
-
-@pytest.mark.parametrize("binding", BINDINGS, ids=lambda b: b.__name__)
-def test_protocol_members_have_compatible_signatures(binding):
-    """Every protocol method exists on the binding with at least the
-    protocol's parameters (a caller written against the protocol is
-    call-compatible with either implementation)."""
-    for name, member in vars(TableFormat).items():
-        if name.startswith("_") or not callable(member):
-            continue
-        impl = getattr(binding, name, None)
-        assert impl is not None, f"{binding.__name__} missing protocol method {name}"
-        proto_params = list(inspect.signature(member).parameters)
-        impl_params = list(inspect.signature(impl).parameters)
-        for p in proto_params:
-            if p in ("self", "args", "kwargs"):
-                continue
-            assert p in impl_params or any(
-                inspect.signature(impl).parameters[q].kind
-                == inspect.Parameter.VAR_KEYWORD
-                for q in impl_params
-            ), f"{binding.__name__}.{name} missing protocol parameter {p!r}"
-
-
-def _roundtrip(spark, table) -> None:
-    """Behavioral conformance driven purely through the protocol surface."""
+def test_laketable_roundtrip_via_protocol(spark, tmp_path):
+    """Round trip through the table's public write/read/history methods."""
     from pyspark.sql import functions as F
 
+    table = LakeTable(spark, str(tmp_path / "rt"))
     assert not table.exists()
     table.create_or_replace(
         spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
@@ -82,25 +40,10 @@ def _roundtrip(spark, table) -> None:
     assert {r.id: r.v for r in table.read().collect()} == {1: "A", 9: "z"}
 
 
-def test_laketable_roundtrip_via_protocol(spark, tmp_path):
-    _roundtrip(spark, LakeTable(spark, str(tmp_path / "rt")))
-
-
-def test_delta_roundtrip_via_protocol(spark, tmp_path):
-    pytest.importorskip("delta")
-    _roundtrip(spark, DeltaTableFormat(spark, str(tmp_path / "rt")))
-
-
-@pytest.mark.parametrize("binding", BINDINGS, ids=lambda b: b.__name__)
-def test_engine_constructible_with_either_binding(spark, tmp_path, binding):
-    """LakeEngine accepts any TableFormat factory; with the Delta binding it
-    constructs (and skips runtime use when delta-spark is absent)."""
+def test_engine_write_list_read(spark, tmp_path):
     from datalake_on_prem_system_spark.engine import LakeEngine
 
-    if binding is DeltaTableFormat:
-        pytest.importorskip("delta")
-    eng = LakeEngine(spark, str(tmp_path / "wh"), namespace="ns", table_format=binding)
-    assert eng.catalog.table_format is binding
+    eng = LakeEngine(spark, str(tmp_path / "wh"), namespace="ns")
     eng.write_table(
         "t1", spark.createDataFrame([(1, "x")], "id int, v string")
     )
