@@ -121,8 +121,9 @@ class LakeEngine:
         return df
 
     def query(self, sql: str) -> DataFrame:
-        """S5 SQL passthrough (trailing-';' strip, api_poc.py:217)."""
-        self.catalog.register_views()
+        """S5 SQL passthrough (trailing-';' strip, api_poc.py:217); only the
+        catalog tables the statement names are registered as views."""
+        self.catalog.register_views(sql)
         return self.spark.sql(sql.strip().rstrip(";"))
 
     # ------------------------------------------------------------- writes

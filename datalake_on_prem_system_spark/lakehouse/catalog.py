@@ -9,6 +9,7 @@ table-name validation (api_poc.py:304 ``isidentifier``).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -58,9 +59,15 @@ class LakeCatalog:
             "col_name string, data_type string",
         )
 
-    def register_views(self) -> None:
-        """Bridge every table into Spark SQL as a temp view (D7,
+    def register_views(self, sql: str) -> None:
+        """Bridge the tables ``sql`` names into Spark SQL as temp views (D7,
         cdc_merger_optimized.py:169) so ``spark.sql`` passthrough (S5) sees
-        the catalog."""
+        the catalog. A table counts as named when its name is one of the
+        statement's identifier tokens, compared case-insensitively; a
+        token that only looks like a table name (a column, a string
+        literal) registers a harmless extra view. Each named table is
+        re-resolved to its latest commit on every call."""
+        named = {tok.lower() for tok in re.findall(r"[A-Za-z_]\w*", sql)}
         for name in self.list_tables():
-            self.table(name).read().createOrReplaceTempView(name)
+            if name.lower() in named:
+                self.table(name).read().createOrReplaceTempView(name)

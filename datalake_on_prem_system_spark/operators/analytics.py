@@ -3135,7 +3135,6 @@ def a_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MARKOV_SCALE = 1_000_000_000_000  # picounits of probability mass
 _MARKOV_ITERS = 20  # fixed chain-walk depth (both engines replay exactly)
-_MARKOV_GEN: dict[str, float] = {}  # events.parquet mtime per sf_dir
 
 
 def _markov_journeys(spark: SparkSession, sf_dir: str):
@@ -3145,16 +3144,13 @@ def _markov_journeys(spark: SparkSession, sf_dir: str):
     (src, dst) transition stream with START/CONV/NULL boundary states,
     and the has-purchase flag. Returns (journey_touches, transitions).
 
-    ``jt`` is PERSISTED (mtime-generation-guarded, the _THEIL_GEN rule):
-    every attribution consumer reads it through ≥ 2 plan branches
+    ``jt`` is PERSISTED (derived state of the events fixture): every
+    attribution consumer reads it through ≥ 2 plan branches
     (transitions + per-channel touch counts in ev_markov_attribution;
     three vocabulary/mask/count branches in ev_shapley_attribution), and
     Catalyst shares nothing across branches — without the cache each
     branch re-runs the first-purchase window over the whole event table."""
-    import os as _os
-
-    from ._cache import persist_bounded
-    from ._cache import release as _release
+    from ._cache import derived
 
     ev = t(spark, sf_dir, "events").select(
         "user_id",
@@ -3170,21 +3166,17 @@ def _markov_journeys(spark: SparkSession, sf_dir: str):
         )
     ).over(w_user)
     tagged = ev.withColumn("fpo", fpo)
-    _src = _os.path.join(sf_dir, "events.parquet")
-    _gen = _os.path.getmtime(_src) if _os.path.exists(_src) else 0.0
-    if _MARKOV_GEN.get(sf_dir) not in (None, _gen):
-        _release(f"markov_jt:{sf_dir}")
-        _release(f"shap_touch:{sf_dir}")
-    _MARKOV_GEN[sf_dir] = _gen
-    jt = persist_bounded(
-        tagged.filter(
+    jt = derived(
+        "markov_jt",
+        sf_dir,
+        ("events",),
+        lambda: tagged.filter(
             (F.col("event_type") != "purchase")
             & (
                 F.col("fpo").isNull()
                 | (F.struct("ts_us", "event_id") < F.col("fpo"))
             )
         ),
-        f"markov_jt:{sf_dir}",
     )
     w_ord = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     trans = jt.select(
@@ -3343,7 +3335,7 @@ def ev_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ONE-ROW revenue anchor (allow-listed scalar cross join)."""
     import math
 
-    from ._cache import persist_bounded
+    from ._cache import derived
 
     jt, _ = _markov_journeys(spark, sf_dir)
     buyers = (
@@ -3353,13 +3345,14 @@ def ev_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # persisted: THREE plan branches read it (channel vocabulary, the
-    # bit_or mask rollup, the per-channel user counts) — released by the
-    # _markov_journeys mtime guard alongside the jt frame it derives from
-    touches = persist_bounded(
-        jt.join(buyers, "user_id").select(
+    # bit_or mask rollup, the per-channel user counts)
+    touches = derived(
+        "shap_touch",
+        sf_dir,
+        ("events",),
+        lambda: jt.join(buyers, "user_id").select(
             "user_id", F.col("event_type").alias("channel")
         ),
-        f"shap_touch:{sf_dir}",
     )
     chans = sorted(
         r.channel for r in touches.select("channel").distinct().collect()
@@ -3555,9 +3548,6 @@ def ev_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_THEIL_GEN: dict[str, float] = {}
-
-
 def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen robust trend of the daily order-revenue series: the
     MEDIAN of all pairwise slopes (x_j − x_i)/(t_j − t_i), plus the
@@ -3616,9 +3606,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def lower_median(
-        vals: DataFrame, col: str, cache_key: str
-    ) -> tuple[float, int]:
+    def lower_median(vals: DataFrame, col: str, kind: str) -> tuple[float, int]:
         """Exact lower-median by rank selection over ~4096 value-range
         buckets, with the bucket WALK on the driver: one (min, max,
         count) anchor, one map-side-combined bucket histogram (≤ 4096
@@ -3634,10 +3622,11 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         so the oracle keeps its plain single-window form. The frame is
         PERSISTED because it feeds the range anchor, the histogram, and
         the bucket top-k — the days² pair join above it must derive
-        once, not once per consumer."""
-        from ._cache import persist_bounded
+        once, not once per consumer. It is derived state of the orders
+        fixture, registered as ``kind``."""
+        from ._cache import derived
 
-        byv = persist_bounded(vals.select(F.col(col)), cache_key)
+        byv = derived(kind, sf_dir, ("orders",), lambda: vals.select(F.col(col)))
         rng = byv.agg(
             F.min(col).alias("mn"),
             F.max(col).alias("mx"),
@@ -3674,29 +3663,14 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a_heavy_hitters rule) so the days² pair join derives exactly once;
     # left as a broadcast frame, its three downstream consumers would each
     # re-derive the whole slope pipeline (measured 3× cost at sf0.1)
-    # mtime-guarded cache generation: a fixture regenerated IN PLACE must
-    # not be served stale ranked slopes — Spark's cache is keyed by
-    # LOGICAL PLAN (unchanged on an in-place rewrite), so the old
-    # generation's entries are explicitly RELEASED on an mtime change
-    # (the _cosupply_edges rule), not merely re-keyed
-    import os as _os
-
-    from ._cache import release as _release
-
-    _src = _os.path.join(sf_dir, "orders.parquet")
-    _gen = _os.path.getmtime(_src) if _os.path.exists(_src) else 0.0
-    if _THEIL_GEN.get(sf_dir) not in (None, _gen):
-        _release(f"ts_theil_s:{sf_dir}")
-        _release(f"ts_theil_r:{sf_dir}")
-    _THEIL_GEN[sf_dir] = _gen
-    med_s, n_pairs = lower_median(slopes, "s", f"ts_theil_s:{sf_dir}")
+    med_s, n_pairs = lower_median(slopes, "s", "ts_theil_s")
     resid = pts.select(
         (
             F.col("x").cast("double") / 100.0
             - (F.lit(med_s) / 100.0) * F.col("ti").cast("double")
         ).alias("r")
     )
-    med_r, _ = lower_median(resid, "r", f"ts_theil_r:{sf_dir}")
+    med_r, _ = lower_median(resid, "r", "ts_theil_r")
     return anchor.select(
         F.col("n_days").cast("long").alias("n_days"),
         F.lit(n_pairs).cast("long").alias("n_pairs"),

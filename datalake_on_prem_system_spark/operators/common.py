@@ -63,19 +63,3 @@ def t_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.repartition(par)
     return df
 
-
-def index_tempdir(prefix: str) -> str:
-    """``tempfile.mkdtemp`` with process-exit cleanup: every persisted
-    index directory (IVF/PQ cells, minhash bands, posting lists) is a
-    process-lifetime artifact here — superseded fits are GC'd eagerly by
-    their cache registries, and THIS registry removes whatever is still
-    live at exit, so repeated bench/test runs never accumulate dirs in
-    /tmp. In production the same artifacts live in durable object storage
-    with an explicit retention policy instead."""
-    import atexit
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path

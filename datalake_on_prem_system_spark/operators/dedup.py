@@ -45,8 +45,8 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._cache import persist_bounded
-from .common import bind, index_tempdir, t, t_par
+from ._cache import derived, index_tempdir
+from .common import bind, t, t_par
 
 _P = 2_147_483_647  # 2^31 - 1; (a*x + b) stays < 2^62 — no int64 overflow
 _N_HASHES = 64
@@ -184,11 +184,11 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-shingled per branch (measured 4.5s → 2.5s cold at sf0.1). The
     # 100 TB equivalent is materializing the shingle table once per pass.
     # Lifetime: the cache must outlive this function (the returned plan
-    # references it lazily), so there is no in-scope unpersist —
-    # persist_bounded registers it with the operator-cache registry, which
-    # caps live operator-internal caches and unpersists the oldest beyond
-    # the cap (harness-independent; sweep harnesses may still clearCache
-    # between queries, and _cache.release_all() frees storage on demand).
+    # references it lazily), so there is no in-scope unpersist — the
+    # derived-state registry owns it, caps live frames and unpersists the
+    # least recently used beyond the cap (harness-independent; sweep
+    # harnesses may still clearCache between queries, and
+    # _cache.release_all() frees storage on demand).
     sh = _shingle_frame(spark, sf_dir)
     # candidate generation runs on xxhash64 SHINGLE IDS, not the strings:
     # the df-count and inverted-index shuffles then move 8-byte longs
@@ -244,40 +244,9 @@ _CURVE_FLOOR = 0.5
 _CURVE_TS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
 
-def _abs_sf(sf_dir: str) -> str:
-    import os
-
-    return os.path.abspath(sf_dir)
+_DOCS = ("documents",)  # the fixture every dedup frame is derived from
 
 
-# fixture generation witnessed per sf_dir by the curve/band-audit caches;
-# on drift the PLAN-keyed persists release (the build_minhash_index rule:
-# Spark's cache is keyed by logical plan, which does not change when file
-# content does — re-keying would serve stale rows AND leak the old entry
-# into the bounded registry, whose eventual eviction unpersists the
-# shared plan the live key relies on)
-_CURVE_GEN: dict[str, float] = {}
-_CURVE_GEN_KEYS = (
-    "curve_ordered",
-    "curve_ver",
-    "band_audit_pairs",
-    "band_audit_sigs",
-    "novelty_first",
-)
-
-
-def _curve_gen_guard(sf_dir: str) -> None:
-    import os
-
-    from ._cache import release
-
-    base = _abs_sf(sf_dir)
-    docs_file = os.path.join(base, "documents.parquet")
-    stamp = os.path.getmtime(docs_file) if os.path.exists(docs_file) else 0.0
-    if _CURVE_GEN.get(base) != stamp:
-        for prefix in _CURVE_GEN_KEYS:
-            release(f"{prefix}:{base}")
-        _CURVE_GEN[base] = stamp
 # drop shingles appearing in more corpus docs than this from the curve's
 # shingle UNIVERSE (sets, sizes, prefixes, postings alike) — the
 # dd_containment df-cap rule applied symmetrically. Without it, a
@@ -333,19 +302,16 @@ def dd_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the df-retained ordered-set frame feeds THREE consumers (both sides
     # of the prefix self-join and the verify's hash sets) — without the
     # persist the shingle→df→sort chain re-runs per consumer (the
-    # _shingle_frame / g_tri_oriented rule). Keys are PLAN-keyed (the
-    # persist_bounded contract); _curve_gen_guard releases them when the
-    # fixture regenerates in place (the build_minhash_index guard — the
-    # Spark cache is keyed by logical plan, which does not change when
-    # file content does).
-    _curve_gen_guard(sf_dir)
-    ordered = persist_bounded(
-        ex.groupBy("doc_id").agg(
+    # _shingle_frame / g_tri_oriented rule)
+    ordered = derived(
+        "curve_ordered",
+        sf_dir,
+        _DOCS,
+        lambda: ex.groupBy("doc_id").agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("df"), F.col("shingle")))
             ).alias("o")
         ),
-        key=f"curve_ordered:{_abs_sf(sf_dir)}",
     )
     prefix_len = (
         F.size("o") - F.ceil(F.lit(_CURVE_FLOOR) * F.size("o")) + 1
@@ -398,7 +364,7 @@ def dd_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the verified floor set is TINY (true pairs only) but its plan is the
     # whole mine — the pair census and the doc census would each re-run
     # the 300k-candidate verify without this persist (measured 2× cost)
-    ver = persist_bounded(ver, key=f"curve_ver:{_abs_sf(sf_dir)}")
+    ver = derived("curve_ver", sf_dir, _DOCS, lambda: ver)
     grid = spark.createDataFrame(
         [(t,) for t in _CURVE_TS], "threshold double"
     )
@@ -428,32 +394,22 @@ def dd_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingle_key(sf_dir: str) -> str:
-    """Registry key for the shared shingle frame. ABSPATH-normalized so
-    invalidation (``build_minhash_index``'s rebuild release) and
-    registration can never miss each other over relative/absolute
-    spellings of the same fixture dir."""
-    import os
-
-    return f"shingles:{os.path.abspath(sf_dir)}"
-
-
 def _shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared, persisted ``(doc_id, sh)`` shingle frame — one plan (and
-    therefore ONE cache entry, see ``persist_bounded``) for dd_ngram_jaccard,
-    dd_minhash_lsh, the incremental index build and the probe path. This is
-    the ONLY registration site for the key: a second site with a different
-    key string over the same plan would let an eviction of one kill the
-    shared Spark cache entry the other still relies on."""
-    docs = t_par(spark, sf_dir, "documents")
-    # persisted for branch sharing (and with the bounded-registry
-    # lifetime): the signature kernel and both verify-join sides
-    # re-shingle otherwise
-    return persist_bounded(
-        docs.filter(F.size(F.split("text", " ")) >= _SHINGLE_N).select(
-            "doc_id", _shingles().alias("sh")
-        ),
-        key=_shingle_key(sf_dir),
+    therefore ONE cache entry) for dd_ngram_jaccard, dd_minhash_lsh, the
+    incremental index build and the probe path. This is the ONLY
+    registration site for the kind: a second kind over the same plan would
+    let an eviction of one kill the shared Spark cache entry the other
+    still relies on."""
+    # persisted for branch sharing: the signature kernel and both
+    # verify-join sides re-shingle otherwise
+    return derived(
+        "shingles",
+        sf_dir,
+        _DOCS,
+        lambda: t_par(spark, sf_dir, "documents")
+        .filter(F.size(F.split("text", " ")) >= _SHINGLE_N)
+        .select("doc_id", _shingles().alias("sh")),
     )
 
 
@@ -568,12 +524,12 @@ def _audit_pair_sigs(
     (a·h + b) mod P mins — must stay bit-identical to the oracle's
     ``_SKETCH_SIG``). The tiny pair frame is persisted (its plan is the
     whole PPJoin mine + verify, and it feeds the ids semi-join, both
-    signature sides, and the caller's pair join); ``_curve_gen_guard``
-    releases it on in-place fixture regeneration."""
-    _curve_gen_guard(sf_dir)
-    pairs = persist_bounded(
-        dd_ngram_jaccard(spark, sf_dir).select("a_id", "b_id", "jaccard"),
-        key=f"band_audit_pairs:{_abs_sf(sf_dir)}",
+    signature sides, and the caller's pair join)."""
+    pairs = derived(
+        "band_audit_pairs",
+        sf_dir,
+        _DOCS,
+        lambda: dd_ngram_jaccard(spark, sf_dir).select("a_id", "b_id", "jaccard"),
     )
     ids = (
         pairs.select(F.col("a_id").alias("doc_id"))
@@ -601,9 +557,8 @@ def _audit_pair_sigs(
     # the signature computation (md5 + 64 interpreted HOF perm-mins per
     # participant doc) feeds BOTH broadcast sides — persist so it runs
     # once per invocation, not per side
-    sigs = persist_bounded(
-        docs.select("doc_id", sig.alias("sig")),
-        key=f"band_audit_sigs:{_abs_sf(sf_dir)}",
+    sigs = derived(
+        "band_audit_sigs", sf_dir, _DOCS, lambda: docs.select("doc_id", sig.alias("sig"))
     )
     sa = sigs.select(F.col("doc_id").alias("a_id"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("b_id"), F.col("sig").alias("sig_b"))
@@ -750,10 +705,6 @@ def dd_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_IDX_CACHE: dict[tuple, str] = {}
-_MINHASH_BUILDS = 0  # test observability: index builds must be train-once
-
-
 def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     """One-time LSH index build over the CORPUS split: persist the corpus'
     ``(doc_id, band, bh)`` band signatures as parquet — the 'CREATE DEDUP
@@ -766,46 +717,19 @@ def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     is plain parquet (local fixture) and the probe broadcasts the batch
     side, which achieves the same no-corpus-shuffle plan.
 
-    Cache key includes the fixture file's mtime — a regenerated corpus
-    triggers a rebuild, and the superseded index dir is removed (same
-    lifecycle contract as ``build_ivf_index``).
+    Derived state of the documents fixture: a regenerated corpus triggers
+    a rebuild, and the superseded index dir is removed.
     """
-    global _MINHASH_BUILDS
     import os
-    import shutil
-    import tempfile
 
-    docs_file = os.path.join(sf_dir, "documents.parquet")
-    stamp = os.path.getmtime(docs_file) if os.path.exists(docs_file) else 0.0
-    key = (os.path.abspath(sf_dir), stamp)
-    if key in _MINHASH_IDX_CACHE:
-        return _MINHASH_IDX_CACHE[key]
-    _MINHASH_BUILDS += 1
+    def build() -> str:
+        sh = _shingle_frame(spark, sf_dir)
+        corpus_sh = sh.filter(F.col("doc_id") % _CORPUS_MOD < _CORPUS_KEEP)
+        path = os.path.join(index_tempdir("minhash_idx_"), "bands")
+        _band_frame(corpus_sh).write.parquet(path)
+        return path
 
-    # Any (re)build drops the plan-keyed caches FIRST: the Spark cache is
-    # keyed by logical plan, which does not change when the file content
-    # does — so a corpus regenerated in place (possibly BEFORE this
-    # session's first build, where no _MINHASH_IDX_CACHE entry exists to
-    # witness the drift) would otherwise serve OLD rows into the "fresh"
-    # index. Releasing a still-valid warm frame merely costs its next
-    # consumer one re-shingle; building an index from stale rows is a
-    # correctness bug. Keys are abspath-normalized (_shingle_key), matching
-    # this function's own cache key.
-    from ._cache import release
-
-    release(_shingle_key(sf_dir))
-    release(f"batch_bands:{key[0]}")
-    release(f"inc_pairs:{key[0]}")
-
-    sh = _shingle_frame(spark, sf_dir)
-    corpus_sh = sh.filter(F.col("doc_id") % _CORPUS_MOD < _CORPUS_KEEP)
-    path = os.path.join(index_tempdir("minhash_idx_"), "bands")
-    _band_frame(corpus_sh).write.parquet(path)
-    _MINHASH_IDX_CACHE[key] = path
-    for stale in [k for k in _MINHASH_IDX_CACHE if k[0] == key[0] and k != key]:
-        old = _MINHASH_IDX_CACHE.pop(stale)
-        shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-    return path
+    return derived("minhash_index", sf_dir, _DOCS, build)
 
 
 def dd_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -834,10 +758,7 @@ def dd_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairing, and the candidate-id derivation all read ONE kernel run
     # (Catalyst shares nothing across plan branches; unpersisted, the
     # sketch re-ran per verify branch and cost more than the full pass)
-    import os as _os
-
-    _abs = _os.path.abspath(sf_dir)
-    batch_bands = persist_bounded(_band_frame(batch_sh), key=f"batch_bands:{_abs}")
+    batch_bands = derived("batch_bands", sf_dir, _DOCS, lambda: _band_frame(batch_sh))
 
     probe = (
         idx.alias("c")
@@ -849,9 +770,7 @@ def dd_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     internal = _bucket_pairs(batch_bands).withColumn("pair_type", F.lit("batch"))
     # candidate pairs are LSH-bucket-bounded — persisting them makes the
     # id-set derivation and both verify-join sides read one materialization
-    pairs = persist_bounded(
-        probe.unionByName(internal), key=f"inc_pairs:{_abs}"
-    )
+    pairs = derived("inc_pairs", sf_dir, _DOCS, lambda: probe.unionByName(internal))
     # Verify shingles come from CANDIDATES ONLY, never the whole corpus: a
     # cold increment costs O(batch sketch + candidate verify) — the
     # candidate id set broadcasts into a semi-join that prunes the
@@ -1638,12 +1557,12 @@ def dd_novelty_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: TWO plan branches read the first-occurrence table (the
     # per-doc seen join and the per-decile novel census), and each branch
     # would otherwise re-run the corpus-sized shingle explode + the
-    # vocabulary-keyed min aggregate behind it (_curve_gen_guard releases
-    # the key when the fixture regenerates in place)
-    _curve_gen_guard(sf_dir)
-    first = persist_bounded(
-        ex.groupBy("shingle").agg(F.min("doc_id").alias("fd")),
-        key=f"novelty_first:{_abs_sf(sf_dir)}",
+    # vocabulary-keyed min aggregate behind it
+    first = derived(
+        "novelty_first",
+        sf_dir,
+        _DOCS,
+        lambda: ex.groupBy("shingle").agg(F.min("doc_id").alias("fd")),
     )
     intra = Window.partitionBy("bkt").orderBy("doc_id")
     per = (

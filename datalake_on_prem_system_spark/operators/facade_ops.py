@@ -7,7 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import index_tempdir, t
+from ._cache import index_tempdir
+from .common import t
 
 
 def _engine_with_parts(spark: SparkSession, sf_dir: str):

@@ -38,8 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _cache
-from ._cache import persist_bounded
+from ._cache import derived
 from .common import t
 
 _PR_SCALE = 1_000_000_000_000  # picounits: rank 1.0 == 1e12
@@ -52,6 +51,10 @@ _PR_D_NUM, _PR_D_DEN = 17, 20
 # unit of the 9th place is 1000 picounits); a double round(rq / 1e12, 9)
 # breaks a ...500 tie differently in Spark and DuckDB
 _PR_RANK = "CAST((rq + 500) {div} 1000 AS DOUBLE) / 1e9"
+
+
+_TRADE = ("orders", "lineitem")  # fixtures of the customer-supplier trade graphs
+_LINEITEM = ("lineitem",)  # the co-supply graph's fixture
 
 
 def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,19 +72,23 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = persist_bounded(
-        pairs.select(F.col("c_node").alias("src"), F.col("s_node").alias("dst"))
+    edges = derived(
+        "g_pagerank_edges",
+        sf_dir,
+        _TRADE,
+        lambda: pairs.select(F.col("c_node").alias("src"), F.col("s_node").alias("dst"))
         .unionAll(
             pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
         )
         .repartition("src"),
-        f"g_pagerank_edges:{sf_dir}",
     )
-    deg = persist_bounded(
-        edges.groupBy(F.col("src").alias("node")).agg(
+    deg = derived(
+        "g_pagerank_deg",
+        sf_dir,
+        _TRADE,
+        lambda: edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
         ),
-        f"g_pagerank_deg:{sf_dir}",
     )
     n = F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
 
@@ -209,7 +216,7 @@ _COSUPPLY_CTES = f"""
 """
 
 
-def triangle_participation(edges: DataFrame, cache_key: str | None = None) -> DataFrame:
+def triangle_participation(edges: DataFrame, sf_dir: str | None = None) -> DataFrame:
     """Per-node triangle participation over an undirected edge list
     (``u`` < ``v``, no duplicates) — the degree-ordered triangle algorithm
     (the MapReduce classic): each edge is ORIENTED from its lower-(deg, id)
@@ -230,15 +237,15 @@ def triangle_participation(edges: DataFrame, cache_key: str | None = None) -> Da
     OOM the driver. The joins are equi-keyed on u/v, so AQE picks
     broadcast on its own whenever the degree table is genuinely small.
 
-    ``cache_key`` persists the ORIENTED edge frame through the bounded
-    registry: it is O(m) (one row per edge, three ints) and feeds three
-    consumers in the plan (both wedge legs and the closing join), each of
+    ``sf_dir`` (the fixture the co-supply edges come from) persists the
+    ORIENTED edge frame as derived state of it: it is O(m) (one row per
+    edge, three ints) and feeds three consumers in the plan (both wedge legs and the closing join), each of
     which would otherwise re-derive the degree rollup + orientation joins
     — at fixture scale that re-derivation is 2–3 extra shuffle-stage
     waves per run (measured ~1.7 s/wave on a loaded 32-core box), and at
     100 TB it is two redundant O(m) shuffles. Same persist-the-shared-
     producer rationale as the edges contract above; tests over ad-hoc
-    frames pass no key and keep the uncached plan."""
+    frames pass no ``sf_dir`` and keep the uncached plan."""
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -261,8 +268,8 @@ def triangle_participation(edges: DataFrame, cache_key: str | None = None) -> Da
         # rank of dst — the wedge join orders its two legs by it
         F.when(u_lower, F.col("dv")).otherwise(F.col("du")).alias("dd"),
     )
-    if cache_key is not None:
-        oriented = persist_bounded(oriented, cache_key)
+    if sf_dir is not None:
+        oriented = derived("g_tri_oriented", sf_dir, _LINEITEM, lambda: oriented)
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     wedges = (
         e1.join(e2, F.col("e1.src") == F.col("e2.src"))
@@ -376,22 +383,6 @@ def g_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (sf_dir, lineitem mtime) → resolved weight cut; the mtime keeps a
-# regenerated-in-place fixture from serving a stale threshold (the
-# build_ivf_index cache-key rule)
-_COSUPPLY_MIN_W: dict[tuple[str, float], int] = {}
-
-
-def _cosupply_key(sf_dir: str) -> tuple[str, float]:
-    import os as _os
-
-    li = _os.path.join(sf_dir, "lineitem.parquet")
-    return (
-        _os.path.abspath(sf_dir),
-        _os.path.getmtime(li) if _os.path.exists(li) else 0.0,
-    )
-
-
 def _cosupply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted candidate pairs (u < v, w = shared orders, w >= floor).
     The per-order pair fan-out is bounded by items-per-order (TPC-H-ish:
@@ -427,55 +418,49 @@ def _cosupply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected supplier co-supply edge list (u < v, distinct): the
+def _cosupply_cut(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """The persisted candidate-pair frame and its weight cut: the
     heaviest ~1/``_COSUPPLY_DECILE`` of candidate pairs by shared-order
-    weight (density-targeted — see the rule comment above). Shared (ONE
-    cache key) by the triangle, k-core, LPA, and assortativity operators
-    so a session computes the pair fan-out once.
+    weight (density-targeted — see the rule comment above).
 
-    The weight cut comes from the pair-weight HISTOGRAM — one partial agg
-    whose output is bounded by the number of DISTINCT weights (small ints,
-    a few hundred values at any scale), collected driver-side and walked
-    with the same integer rank arithmetic the oracle's window CTE uses.
-    Memoized per sf_dir; the pair frame itself is persisted (it feeds the
+    The cut comes from the pair-weight HISTOGRAM — one partial agg whose
+    output is bounded by the number of DISTINCT weights (small ints, a few
+    hundred values at any scale), collected driver-side and walked with
+    the same integer rank arithmetic the oracle's window CTE uses. Both
+    are derived state of the lineitem fixture (the pair frame feeds the
     histogram and the edge filter)."""
-    key = _cosupply_key(sf_dir)
-    if key not in _COSUPPLY_MIN_W:
-        # mtime-key miss: if lineitem was regenerated IN PLACE, Spark's
-        # plan-keyed cache would still serve the stale pair rows (the
-        # logical plan is unchanged), so the fresh threshold would be
-        # derived from old data. Drop any superseded same-plan entries
-        # before re-persisting (round-10 ADVICE; release() documents
-        # exactly this hazard). Also invalidate thresholds memoized for
-        # an older generation of the same sf_dir.
-        _cache.release(f"g_cosupply_pw:{sf_dir}")
-        _cache.release(f"g_cosupply_edges:{sf_dir}")
-        _cache.release(f"g_tri_oriented:{sf_dir}")  # derived from the edges
-        _cache.release(f"g_rc_deg:{sf_dir}")  # rich-club degrees, same edges
-        _cache.release(f"g_lpa_labels:{sf_dir}")  # LPA labels, same edges
-        for stale in [k for k in _COSUPPLY_MIN_W if k[0] == key[0]]:
-            del _COSUPPLY_MIN_W[stale]
-    pw = persist_bounded(
-        _cosupply_pairs(spark, sf_dir), f"g_cosupply_pw:{sf_dir}"
+    pw = derived(
+        "g_cosupply_pw", sf_dir, _LINEITEM, lambda: _cosupply_pairs(spark, sf_dir)
     )
-    if key not in _COSUPPLY_MIN_W:
+
+    def weight_cut() -> int:
         hist = sorted(
             pw.groupBy("w").agg(F.count(F.lit(1)).alias("c")).collect(),
             key=lambda r: -r.w,
         )
         n = sum(r.c for r in hist)
         rank = (n + _COSUPPLY_DECILE - 1) // _COSUPPLY_DECILE
-        cum, min_w = 0, _COSUPPLY_W_FLOOR
+        cum = 0
         for r in hist:
             cum += r.c
             if cum >= rank:
-                min_w = int(r.w)
-                break
-        _COSUPPLY_MIN_W[key] = min_w
-    return persist_bounded(
-        pw.filter(F.col("w") >= _COSUPPLY_MIN_W[key]).select("u", "v"),
-        f"g_cosupply_edges:{sf_dir}",
+                return int(r.w)
+        return _COSUPPLY_W_FLOOR
+
+    return pw, derived("g_cosupply_min_w", sf_dir, _LINEITEM, weight_cut)
+
+
+def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Undirected supplier co-supply edge list (u < v, distinct): the
+    pairs at or above ``_cosupply_cut``'s weight cut. Shared (ONE registry
+    kind) by the triangle, k-core, LPA, and assortativity operators so a
+    session computes the pair fan-out once."""
+    pw, min_w = _cosupply_cut(spark, sf_dir)
+    return derived(
+        "g_cosupply_edges",
+        sf_dir,
+        _LINEITEM,
+        lambda: pw.filter(F.col("w") >= min_w).select("u", "v"),
     )
 
 
@@ -489,7 +474,7 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_graph.py``)."""
     edges = _cosupply_edges(spark, sf_dir)
     return (
-        triangle_participation(edges, cache_key=f"g_tri_oriented:{sf_dir}")
+        triangle_participation(edges, sf_dir)
         .select(F.col("node").alias("s_suppkey"), "n_triangles")
         .orderBy(F.desc("n_triangles"), F.asc("s_suppkey"))
         .limit(_TRI_TOP_K)
@@ -536,7 +521,7 @@ def g_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    tri = triangle_participation(edges, cache_key=f"g_tri_oriented:{sf_dir}")
+    tri = triangle_participation(edges, sf_dir)
     joined = deg.join(tri, "node", "left_outer").fillna(0, ["n_triangles"])
     coeff = F.when(
         F.col("degree") >= 2,
@@ -564,7 +549,7 @@ _LPA_ITERS = 3
 
 
 def label_propagation(
-    edges: DataFrame, iters: int = _LPA_ITERS, cache_key: str | None = None
+    edges: DataFrame, iters: int = _LPA_ITERS, sf_dir: str | None = None
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
     2007) with a DETERMINISTIC update: labels start as node ids; each
@@ -580,8 +565,9 @@ def label_propagation(
     Lineage stays shallow at fixed iters (checkpoint every ~5 rounds
     otherwise, as dd_components documents). Returns (node, label).
 
-    ``cache_key`` registers the FINAL label frame in the bounded persist
-    registry (the ``g_tri_oriented`` recipe): the labels feed multiple
+    ``sf_dir`` (the fixture the co-supply edges come from) persists the
+    FINAL label frame as derived state of it (the ``g_tri_oriented``
+    recipe): the labels feed multiple
     downstream consumers (``g_label_propagation``'s size rollup AND
     ``g_modularity``'s three aggregates — 2 joins + a degree rollup),
     and without the cache each one re-runs the whole 3-round Pregel loop
@@ -605,8 +591,8 @@ def label_propagation(
                 "neg"
             ].alias("label")
         ).select("node", (-F.col("label")).alias("label"))
-    if cache_key is not None:
-        labels = persist_bounded(labels, cache_key)
+    if sf_dir is not None:
+        labels = derived("g_lpa_labels", sf_dir, _LINEITEM, lambda: labels)
     return labels
 
 
@@ -619,7 +605,7 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     member count, size-desc."""
     edges = _cosupply_edges(spark, sf_dir)
     return (
-        label_propagation(edges, cache_key=f"g_lpa_labels:{sf_dir}")
+        label_propagation(edges, sf_dir=sf_dir)
         .groupBy(F.col("label").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_members"))
         .orderBy(F.desc("n_members"), F.asc("community"))
@@ -833,7 +819,7 @@ _CN_TOP_K = 50
 
 
 def common_neighbor_pairs(
-    edges: DataFrame, hub_cap: int, cache_key: str | None = None
+    edges: DataFrame, hub_cap: int, sf_dir: str | None = None
 ) -> DataFrame:
     """Common-neighbor / Jaccard link prediction over a bipartite edge list
     ``(c, p)``: for every pair of left-nodes sharing at least one right-node,
@@ -856,10 +842,10 @@ def common_neighbor_pairs(
     # and every join key here is already the aggregation key (co-partition)
     pdeg = edges.groupBy("p").agg(F.count(F.lit(1)).alias("pd"))
     kept = edges.join(pdeg.filter(F.col("pd") <= hub_cap).select("p"), "p")
-    if cache_key is not None:
+    if sf_dir is not None:
         # three consumers (degree rollup + both pair-join legs) — persist
-        # through the bounded registry so the edge build runs once
-        kept = persist_bounded(kept, cache_key)
+        # as derived state of the trade fixture so the edge build runs once
+        kept = derived("g_cn_kept", sf_dir, _TRADE, lambda: kept)
     cdeg = kept.groupBy("c").agg(F.count(F.lit(1)).alias("deg"))
     pairs = (
         kept.select(F.col("p"), F.col("c").alias("c1"))
@@ -903,7 +889,7 @@ def g_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return (
-        common_neighbor_pairs(edges, _CN_HUB_CAP, cache_key=f"g_cn_kept:{sf_dir}")
+        common_neighbor_pairs(edges, _CN_HUB_CAP, sf_dir)
         .select(
             F.col("c1").alias("custkey_a"),
             F.col("c2").alias("custkey_b"),
@@ -971,11 +957,13 @@ def g_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     pdeg_all = edges.groupBy("p").agg(F.count(F.lit(1)).alias("deg"))
-    kept = persist_bounded(
-        edges.join(
+    kept = derived(
+        "g_ra_kept",
+        sf_dir,
+        _TRADE,
+        lambda: edges.join(
             pdeg_all.filter(F.col("deg") <= _CN_HUB_CAP), "p"
         ).select("c", "p", "deg"),
-        f"g_ra_kept:{sf_dir}",
     )
     pairs = (
         kept.select("c", "p", "deg")
@@ -1060,13 +1048,7 @@ def g_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoint) + an anti-join against visited; frontier and visited are
     node-bounded. The driver never sees node data — only the one-row
     source anchor and the per-round emptiness probe."""
-    edges = _cosupply_edges(spark, sf_dir)
-    sym = persist_bounded(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ),
-        f"g_bfs_sym:{sf_dir}",
-    )
+    sym = _cosupply_sym(spark, sf_dir)
     deg1 = (
         sym.groupBy("u")
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -1140,13 +1122,7 @@ def g_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iteration contract and the shared symmetric-edge cache are the
     g_bfs_hops ones; the two hop anchors are one-row collects. DuckDB
     replays both sweeps as recursive CTEs — integer hops, exact."""
-    edges = _cosupply_edges(spark, sf_dir)
-    sym = persist_bounded(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ),
-        f"g_bfs_sym:{sf_dir}",
-    )
+    sym = _cosupply_sym(spark, sf_dir)
     deg1 = (
         sym.groupBy("u")
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -1239,13 +1215,7 @@ def g_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pathological high-diameter graph would switch to large-star/
     small-star rounds (O(log n)), which this loop structure admits
     without changing the data layout."""
-    edges = _cosupply_edges(spark, sf_dir)
-    sym = persist_bounded(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ),
-        f"g_bfs_sym:{sf_dir}",  # shared with g_bfs_hops: same frame, one cache
-    )
+    sym = _cosupply_sym(spark, sf_dir)  # shared with g_bfs_hops
     lbl = components_of(sym)
     sizes = lbl.groupBy(F.col("lbl").alias("component")).agg(
         F.count(F.lit(1)).alias("component_size")
@@ -1321,17 +1291,27 @@ _CC_ORACLE = f"""
 """
 
 
+def _cosupply_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted symmetric co-supply edge list (both orientations of every
+    edge), shared by the BFS and component operators."""
+    edges = _cosupply_edges(spark, sf_dir)
+    return derived(
+        "g_bfs_sym",
+        sf_dir,
+        _LINEITEM,
+        lambda: edges.unionAll(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ),
+    )
+
+
 def _cosupply_wedges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHTED co-supply edges (u, v, w) — the same edge set as
-    ``_cosupply_edges`` (which memoizes the weight cut as a side effect)
-    but keeping the shared-order weight the MSF needs."""
-    _cosupply_edges(spark, sf_dir)  # resolves + memoizes the weight cut
-    pw = persist_bounded(
-        _cosupply_pairs(spark, sf_dir), f"g_cosupply_pw:{sf_dir}"
-    )
-    return persist_bounded(
-        pw.filter(F.col("w") >= _COSUPPLY_MIN_W[_cosupply_key(sf_dir)]),
-        f"g_cosupply_wedges:{sf_dir}",
+    ``_cosupply_edges`` but keeping the shared-order weight the MSF
+    needs."""
+    pw, min_w = _cosupply_cut(spark, sf_dir)
+    return derived(
+        "g_cosupply_wedges", sf_dir, _LINEITEM, lambda: pw.filter(F.col("w") >= min_w)
     )
 
 
@@ -1605,12 +1585,14 @@ def g_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed ({_HITS_ITERS}), lineage shallow."""
     orders = t(spark, sf_dir, "orders")
     lineitem = t(spark, sf_dir, "lineitem")
-    tp = persist_bounded(
-        orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
+    tp = derived(
+        "g_hits_tp",
+        sf_dir,
+        _TRADE,
+        lambda: orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
         .repartition("c"),
-        f"g_hits_tp:{sf_dir}",
     )
     return (
         hits_authorities(tp)
@@ -1727,23 +1709,23 @@ def g_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula."""
     return modularity_score(
         _cosupply_edges(spark, sf_dir),
-        lpa_cache_key=f"g_lpa_labels:{sf_dir}",
+        sf_dir,
     )
 
 
 def modularity_score(
-    edges: DataFrame, lpa_cache_key: str | None = None
+    edges: DataFrame, sf_dir: str | None = None
 ) -> DataFrame:
     """Q over any undirected edge list (u < v, distinct) with 3-round
     LPA labels; see ``g_modularity``. Hand-pinned in tests/test_graph.py
     (two disjoint triangles → perfect partition, Q = 0.5).
 
-    ``lpa_cache_key`` shares the label frame with ``g_label_propagation``
-    (same key ⇒ same Spark cache entry), so scoring a partition that was
+    ``sf_dir`` shares the label frame with ``g_label_propagation`` (same
+    registry entry ⇒ same Spark cache entry), so scoring a partition that was
     just detected never re-runs the Pregel loop — and Q's own two label
     joins + degree rollup read the persisted frame instead of re-deriving
     the 3-round lineage three times."""
-    lab = label_propagation(edges, cache_key=lpa_cache_key)
+    lab = label_propagation(edges, sf_dir=sf_dir)
     lu = lab.select(F.col("node").alias("u"), F.col("label").alias("lab_u"))
     lv = lab.select(F.col("node").alias("v"), F.col("label").alias("lab_v"))
     em = F.broadcast(
@@ -1858,17 +1840,17 @@ def g_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     community-bounded rollups, TakeOrdered top-10."""
     return conductance_scores(
         _cosupply_edges(spark, sf_dir),
-        lpa_cache_key=f"g_lpa_labels:{sf_dir}",
+        sf_dir,
     )
 
 
 def conductance_scores(
-    edges: DataFrame, lpa_cache_key: str | None = None
+    edges: DataFrame, sf_dir: str | None = None
 ) -> DataFrame:
     """φ over any undirected edge list (u < v, distinct) with 3-round LPA
     labels; see ``g_conductance``. Hand-pinned in tests/test_graph.py
     (two triangles + one bridge edge → φ = 1/7 each side)."""
-    lab = label_propagation(edges, cache_key=lpa_cache_key)
+    lab = label_propagation(edges, sf_dir=sf_dir)
     lu = lab.select(F.col("node").alias("u"), F.col("label").alias("lab_u"))
     lv = lab.select(F.col("node").alias("v"), F.col("label").alias("lab_v"))
     tagged = edges.join(lu, "u").join(lv, "v")
@@ -2128,10 +2110,10 @@ def g_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: every count is integer; RC does its one double division
     per k at the end."""
     edges = _cosupply_edges(spark, sf_dir)
-    return rich_club_curve(edges, cache_key=f"g_rc_deg:{sf_dir}")
+    return rich_club_curve(edges, sf_dir)
 
 
-def rich_club_curve(edges: DataFrame, cache_key: str | None = None) -> DataFrame:
+def rich_club_curve(edges: DataFrame, sf_dir: str | None = None) -> DataFrame:
     """RC(k) curve over an undirected edge list (u < v, distinct); see
     ``g_rich_club``. Hand-pinned in tests/test_graph.py."""
     deg = (
@@ -2140,8 +2122,8 @@ def rich_club_curve(edges: DataFrame, cache_key: str | None = None) -> DataFrame
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    if cache_key is not None:
-        deg = persist_bounded(deg, cache_key)
+    if sf_dir is not None:
+        deg = derived("g_rc_deg", sf_dir, _LINEITEM, lambda: deg)
     edge_min = (
         edges.join(deg.select(F.col("node").alias("u"), F.col("deg").alias("du")), "u")
         .join(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")), "v")

@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from ..lakehouse import LakeCatalog, LakeTable, snapshot_diff
 from ..lakehouse.diff import changes_feed
-from .common import index_tempdir, t
+from ._cache import derived, index_tempdir
+from .common import t
 from .relational import _HLL_REL_BOUND
 
 
@@ -64,23 +65,21 @@ def _cdc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return changes.unionByName(inserts)
 
 
-# five queries read the same two-commit table: build it once per sf_dir
-# (same memoization precedent as streaming_ops._ENVELOPE_CACHE)
-_MERGED_CACHE: dict[str, str] = {}
-
-
 def _merged_table(spark: SparkSession, sf_dir: str) -> LakeTable:
-    """v0 = base customers; v1 = CDC MERGE (update/delete/insert)."""
-    if sf_dir not in _MERGED_CACHE:
+    """v0 = base customers; v1 = CDC MERGE (update/delete/insert). Five
+    queries read this table, so it is built once per fixture; the MERGE is
+    ``lh_merge_upsert``'s measured work."""
+
+    def build() -> str:
         root = index_tempdir("lake_merge_")
         table = LakeTable(spark, root)
         table.create_or_replace(_base_customers(spark, sf_dir))
         table.merge(_cdc_source(spark, sf_dir), pk="c_custkey", op_col="op")
-        _MERGED_CACHE[sf_dir] = root
-    return LakeTable(spark, _MERGED_CACHE[sf_dir])
+        return root
 
-
-_MOR_AMP_CACHE: dict[str, str] = {}
+    return LakeTable(
+        spark, derived("lh_merged", sf_dir, ("customer",), build, measured=True)
+    )
 
 
 def _n_pending_deltas(table: LakeTable) -> int:
@@ -98,7 +97,8 @@ def _mor_amplified_table(spark: SparkSession, sf_dir: str) -> LakeTable:
     worst-case read-amplification state a reader can see. Each delta
     updates the disjoint slice c_custkey % 7 == i, so every customer key
     is covered by exactly one delta — SQL-expressible final state."""
-    if sf_dir not in _MOR_AMP_CACHE:
+
+    def build() -> str:
         root = index_tempdir("lake_moramp_")
         table = LakeTable(spark, root)
         # mor mode is a TABLE PROPERTY — without it every merge is a
@@ -113,8 +113,9 @@ def _mor_amplified_table(spark: SparkSession, sf_dir: str) -> LakeTable:
         for i in range(7):
             table.merge(_mor_amp_delta(spark, sf_dir, i), pk="c_custkey")
         assert _n_pending_deltas(table) == 7, "expected 7 pending deltas"
-        _MOR_AMP_CACHE[sf_dir] = root
-    return LakeTable(spark, _MOR_AMP_CACHE[sf_dir])
+        return root
+
+    return LakeTable(spark, derived("lh_mor_amp", sf_dir, ("customer",), build))
 
 
 def _full_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,9 +221,6 @@ def mor_read_profile(spark: SparkSession, sf_dir: str) -> dict:
         shutil.rmtree(root, ignore_errors=True)
 
 
-_CPK_CACHE: dict[str, str] = {}
-
-
 def lh_composite_key_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-primary-key DML (beyond the single-pk reference): lineitem's
     natural (l_orderkey, l_linenumber) key, bucket layout + pruning on the
@@ -230,10 +228,11 @@ def lh_composite_key_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-update of every linenumber=1 row, merge-delete of every
     linenumber=3 row — then the final state. Rows sharing a leading key are
     individually addressed (the whole point of the composite key). The
-    built table memoizes per sf_dir (same precedent as _MERGED_CACHE):
-    repeat sweeps re-read, not re-commit, and no tempdir-per-call leak."""
+    built table is derived state of the fixture: repeat sweeps re-read,
+    not re-commit."""
     pk = ["l_orderkey", "l_linenumber"]
-    if sf_dir not in _CPK_CACHE:
+
+    def build() -> str:
         root = index_tempdir("lake_cpk_")
         table = LakeTable(spark, root)
         base = (
@@ -253,11 +252,9 @@ def lh_composite_key_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.merge(upd, pk=pk)
         dels = base.filter(F.col("l_linenumber") == 3).withColumn("op", F.lit("d"))
         table.merge(dels, pk=pk, op_col="op")
-        _CPK_CACHE[sf_dir] = root
-    return LakeTable(spark, _CPK_CACHE[sf_dir]).read()
+        return root
 
-
-_SCD2_CACHE: dict[str, str] = {}
+    return LakeTable(spark, derived("lh_cpk", sf_dir, ("lineitem",), build)).read()
 
 
 def lh_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -275,8 +272,8 @@ def lh_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each batch is one atomic composite-key MERGE (close + open in the same
     commit); the oracle reconstructs all three version strata as pure SQL.
-    Memoized per sf_dir (the _CPK_CACHE precedent): repeat sweeps re-read,
-    not re-commit."""
+    The table is derived state of the fixture (its MERGEs are the measured
+    work): repeat sweeps re-read, not re-commit."""
     return LakeTable(spark, _scd2_root(spark, sf_dir)).read()
 
 
@@ -284,7 +281,8 @@ def _scd2_root(spark: SparkSession, sf_dir: str) -> str:
     from ..lakehouse.scd import scd2_apply, scd2_init
 
     key, attrs = "c_custkey", ["c_mktsegment", "c_acctbal"]
-    if sf_dir not in _SCD2_CACHE:
+
+    def build() -> str:
         root = index_tempdir("lake_scd2_")
         table = LakeTable(spark, root)
         cust = t(spark, sf_dir, "customer").select(
@@ -305,8 +303,9 @@ def _scd2_root(spark: SparkSession, sf_dir: str) -> str:
             (F.col("c_acctbal") + 1000.0).alias("c_acctbal"),
         )
         scd2_apply(table, b2, key, attrs, "2024-02-01")
-        _SCD2_CACHE[sf_dir] = root
-    return _SCD2_CACHE[sf_dir]
+        return root
+
+    return derived("lh_scd2", sf_dir, ("customer",), build, measured=True)
 
 
 _SCD2_BODY = """
@@ -392,9 +391,6 @@ def lh_scd2_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PARTITIONS_CACHE: dict[str, str] = {}
-
-
 def lh_partitions_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """$partitions metadata table over a hive-partitioned orders table
     (one append on top of the create, so two segments' leaves aggregate):
@@ -405,7 +401,8 @@ def lh_partitions_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports it under NULL partition values (pytest-pinned, with n_files);
     the compact() folds everything into hive leaves and this query reads
     the fully-partitioned snapshot."""
-    if sf_dir not in _PARTITIONS_CACHE:
+
+    def build() -> str:
         root = index_tempdir("lake_parts_")
         table = LakeTable(spark, root)
         orders = t(spark, sf_dir, "orders").select(
@@ -417,13 +414,12 @@ def lh_partitions_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.append(orders.filter(F.col("o_orderkey") % 2 == 1))
         table.compact()
-        _PARTITIONS_CACHE[sf_dir] = root
-    return LakeTable(spark, _PARTITIONS_CACHE[sf_dir]).partitions().select(
+        return root
+
+    root = derived("lh_partitions", sf_dir, ("orders",), build)
+    return LakeTable(spark, root).partitions().select(
         "o_orderpriority", "n_rows"
     )
-
-
-_STATS_SKIP_CACHE: dict[str, str] = {}
 
 
 def _orders_epoch_table(spark: SparkSession, sf_dir: str) -> LakeTable:
@@ -431,7 +427,8 @@ def _orders_epoch_table(spark: SparkSession, sf_dir: str) -> LakeTable:
     o_ym (month-string) range — the entry-level min/max then lets a range
     filter skip whole historical segments (the classic append-by-time
     data-skipping case)."""
-    if sf_dir not in _STATS_SKIP_CACHE:
+
+    def build() -> str:
         root = index_tempdir("lake_statskip_")
         table = LakeTable(spark, root)
         base = t(spark, sf_dir, "orders").select(
@@ -443,8 +440,9 @@ def _orders_epoch_table(spark: SparkSession, sf_dir: str) -> LakeTable:
         table.create_or_replace(base.filter(F.col("o_ym") < "1995-01"))
         table.append(base.filter((F.col("o_ym") >= "1995-01") & (F.col("o_ym") < "1997-01")))
         table.append(base.filter(F.col("o_ym") >= "1997-01"))
-        _STATS_SKIP_CACHE[sf_dir] = root
-    return LakeTable(spark, _STATS_SKIP_CACHE[sf_dir])
+        return root
+
+    return LakeTable(spark, derived("lh_orders_epoch", sf_dir, ("orders",), build))
 
 
 def lh_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,14 +460,12 @@ def lh_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BLOOM_CACHE: dict[str, tuple[str, int]] = {}
-
-
 def _bloom_orders_table(spark: SparkSession, sf_dir: str) -> tuple[LakeTable, int]:
     """The 8-epoch bloom-indexed orders table shared by the point-lookup
     and join-pruning serve paths; built once per fixture (the lookup
     target — min custkey — is SETUP, not the measured operator)."""
-    if sf_dir not in _BLOOM_CACHE:
+
+    def build() -> tuple[str, int]:
         root = index_tempdir("lake_bloom_")
         table = LakeTable(spark, root)
         base = t(spark, sf_dir, "orders").select(
@@ -484,8 +480,9 @@ def _bloom_orders_table(spark: SparkSession, sf_dir: str) -> tuple[LakeTable, in
         for epoch in range(1, 8):
             table.append(base.filter(F.col("o_orderkey") % 8 == epoch))
         target = int(table.read().agg(F.min("o_custkey")).collect()[0][0])
-        _BLOOM_CACHE[sf_dir] = (root, target)
-    root, target = _BLOOM_CACHE[sf_dir]
+        return root, target
+
+    root, target = derived("lh_bloom_orders", sf_dir, ("orders",), build)
     return LakeTable(spark, root), target
 
 
@@ -501,9 +498,6 @@ def lh_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     key), not O(table). Soundness + parity pinned in tests/test_bloom.py."""
     table, target = _bloom_orders_table(spark, sf_dir)
     return table.read_where(F.col("o_custkey") == target)
-
-
-_BLOOM_JOIN_KEYS: dict[str, list[int]] = {}
 
 
 def lh_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -527,8 +521,11 @@ def lh_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: o_totalprice sums ride decimal(18,4) on both engines;
     ONE round + double cast at the end."""
     table, _ = _bloom_orders_table(spark, sf_dir)
-    if sf_dir not in _BLOOM_JOIN_KEYS:
-        _BLOOM_JOIN_KEYS[sf_dir] = [
+    keys = derived(
+        "lh_bloom_join_keys",
+        sf_dir,
+        ("orders",),
+        lambda: [
             int(r.o_custkey)
             for r in table.read()
             .select("o_custkey")
@@ -536,8 +533,8 @@ def lh_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_custkey")
             .limit(2)
             .collect()
-        ]
-    keys = _BLOOM_JOIN_KEYS[sf_dir]
+        ],
+    )
     dim = (
         t(spark, sf_dir, "customer")
         .filter(F.col("c_custkey").isin(keys))
@@ -555,9 +552,6 @@ def lh_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("c_custkey")
     )
-
-
-_DV_CACHE: dict[str, str] = {}
 
 
 def lh_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,7 +573,8 @@ def lh_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: o_totalprice sums ride decimal(18,4) both engines; the
     oracle recomputes the final state as pure predicates over orders."""
-    if sf_dir not in _DV_CACHE:
+
+    def build() -> str:
         root = index_tempdir("lake_dv_")
         table = LakeTable(spark, root)
         base = t(spark, sf_dir, "orders").select(
@@ -591,8 +586,9 @@ def lh_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.delete_vectors(F.col("o_orderkey") % 10 == 4)
         table.delete_vectors(F.col("o_orderpriority") == "1-URGENT")
         table.append(base.filter(F.col("o_orderkey") % 2 == 1))
-        _DV_CACHE[sf_dir] = root
-    table = LakeTable(spark, _DV_CACHE[sf_dir])
+        return root
+
+    table = LakeTable(spark, derived("lh_dv", sf_dir, ("orders",), build))
     return (
         table.read()
         .groupBy("o_orderpriority")
@@ -606,9 +602,6 @@ def lh_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZORDER_CACHE: dict[str, str] = {}
-
-
 def lh_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE ZORDER serve path: orders rewritten by
     ``compact_clustered(zorder_key([o_custkey, o_totalprice]))`` into 16
@@ -620,7 +613,7 @@ def lh_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     not semantics)."""
     from ..lakehouse.zorder import zorder_key
 
-    if sf_dir not in _ZORDER_CACHE:
+    def build() -> str:
         root = index_tempdir("lake_zorder_")
         table = LakeTable(spark, root)
         table.create_or_replace(
@@ -633,8 +626,9 @@ def lh_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.compact_clustered(
             zorder_key(table.read(), ["o_custkey", "o_totalprice"]), n_ranges=16
         )
-        _ZORDER_CACHE[sf_dir] = root
-    table = LakeTable(spark, _ZORDER_CACHE[sf_dir])
+        return root
+
+    table = LakeTable(spark, derived("lh_zorder", sf_dir, ("orders",), build))
     band = table.read_where(
         (F.col("o_totalprice") >= 100000.0) & (F.col("o_totalprice") < 120000.0)
     )
@@ -1270,22 +1264,20 @@ def lh_incremental_join_view_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return view_revenue(view)
 
 
-# three-commit table for the change-data-feed query (separate from
-# _MERGED_CACHE — the feed's extra commit must not shift the five queries
-# reading that table's latest state)
-_FEED_CACHE: dict[str, str] = {}
-
-
 def _feed_table(spark: SparkSession, sf_dir: str) -> LakeTable:
-    """v0 = base customers; v1 = CDC MERGE; v2 = segment update."""
-    if sf_dir not in _FEED_CACHE:
+    """v0 = base customers; v1 = CDC MERGE; v2 = segment update. Separate
+    from ``_merged_table``: the feed's extra commit must not shift the five
+    queries reading that table's latest state."""
+
+    def build() -> str:
         root = index_tempdir("lake_feed_")
         table = LakeTable(spark, root)
         table.create_or_replace(_base_customers(spark, sf_dir))
         table.merge(_cdc_source(spark, sf_dir), pk="c_custkey", op_col="op")
         table.update_where(F.col("c_custkey") % 11 == 2, {"c_mktsegment": "VIP"})
-        _FEED_CACHE[sf_dir] = root
-    return LakeTable(spark, _FEED_CACHE[sf_dir])
+        return root
+
+    return LakeTable(spark, derived("lh_feed", sf_dir, ("customer",), build))
 
 
 def lh_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1399,9 +1391,6 @@ def lh_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_PLAN_CACHE: dict[str, str] = {}
-# sf_dir → (overlapping-layout root, sorted-layout root)
-_CLUSTER_DEPTH_CACHE: dict[str, tuple[str, str]] = {}
 _CD_SEGMENTS = 7
 
 
@@ -1434,7 +1423,8 @@ def lh_cluster_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     division)."""
     from pyspark.sql import Window
 
-    if sf_dir not in _CLUSTER_DEPTH_CACHE:
+    def build() -> tuple[str, str]:
+        """(overlapping-layout root, sorted-layout root)"""
         keys = t(spark, sf_dir, "orders").select("o_orderkey")
         n = keys.count()
         w_rank = Window.orderBy("o_orderkey")
@@ -1457,10 +1447,12 @@ def lh_cluster_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else:
                     table.append(part)
             roots.append(root)
-        _CLUSTER_DEPTH_CACHE[sf_dir] = (roots[0], roots[1])
+        return roots[0], roots[1]
+
     out = []
     for layout, root in zip(
-        ("append-overlapping", "range-sorted"), _CLUSTER_DEPTH_CACHE[sf_dir]
+        ("append-overlapping", "range-sorted"),
+        derived("lh_cluster_depth", sf_dir, ("orders",), build),
     ):
         segs = (
             LakeTable(spark, root)
@@ -1523,7 +1515,7 @@ def lh_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row total is the scalar-anchor cross-join."""
     from pyspark.sql import Window
 
-    if sf_dir not in _COMPACT_PLAN_CACHE:
+    def build() -> str:
         root = index_tempdir("lake_compactplan_")
         table = LakeTable(spark, root)
         base = t(spark, sf_dir, "orders").select(
@@ -1536,8 +1528,9 @@ def lh_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.create_or_replace(base.filter(F.col("o_year") == years[0]))
         for y in years[1:]:
             table.append(base.filter(F.col("o_year") == y))
-        _COMPACT_PLAN_CACHE[sf_dir] = root
-    table = LakeTable(spark, _COMPACT_PLAN_CACHE[sf_dir])
+        return root
+
+    table = LakeTable(spark, derived("lh_compaction_plan", sf_dir, ("orders",), build))
     segs = (
         table.files()
         .filter(~F.col("is_delta"))
@@ -1587,7 +1580,6 @@ def lh_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VACUUM_PLAN_CACHE: dict[str, str] = {}
 _VACUUM_KEEP = 2  # live snapshots retained by the audit's retention policy
 
 
@@ -1607,15 +1599,17 @@ def lh_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     built from — so the oracle derives the identical report straight from
     the orders table. Scale shape: O(versions × manifest entries)
     driver-side metadata, like every $-table here."""
-    if sf_dir not in _VACUUM_PLAN_CACHE:
+
+    def build() -> str:
         root = index_tempdir("lake_vacplan_")
         table = LakeTable(spark, root)
         base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
         table.create_or_replace(base)  # v1: full load (expired by policy)
         table.create_or_replace(base.filter(F.col("o_orderkey") % 2 == 0))
         table.append(base.filter(F.col("o_orderkey") % 4 == 1))
-        _VACUUM_PLAN_CACHE[sf_dir] = root
-    table = LakeTable(spark, _VACUUM_PLAN_CACHE[sf_dir])
+        return root
+
+    table = LakeTable(spark, derived("lh_vacuum_plan", sf_dir, ("orders",), build))
     versions = sorted(table.versions())
     live = set(versions[-_VACUUM_KEEP:])
     # distributed manifest relation: union the per-version $files frames
@@ -1653,9 +1647,6 @@ def lh_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORPHAN_CACHE: dict[str, str] = {}
-
-
 def lh_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orphan-file detection (Iceberg ``remove_orphan_files`` dry-run): a
     segment directory that exists under ``data/`` but is referenced by NO
@@ -1690,7 +1681,7 @@ def lh_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re as _re
     from functools import reduce as _reduce
 
-    if sf_dir not in _ORPHAN_CACHE:
+    def build() -> str:
         root = index_tempdir("lake_orphan_")
         table = LakeTable(spark, root)
         base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -1700,8 +1691,9 @@ def lh_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(F.col("o_orderkey") % 7 == 3).write.parquet(
             os.path.join(root, "data", "99-deadbeef.parquet")
         )
-        _ORPHAN_CACHE[sf_dir] = root
-    return orphan_report(spark, _ORPHAN_CACHE[sf_dir])
+        return root
+
+    return orphan_report(spark, derived("lh_orphan_files", sf_dir, ("orders",), build))
 
 
 def orphan_report(spark: SparkSession, root: str) -> DataFrame:

@@ -875,7 +875,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``unicode(c)`` counts."""
     import pandas as pd  # noqa: F401 — required on executors
 
-    from ._cache import persist_bounded
+    from ._cache import derived
 
     m = _manifest(t_par(spark, sf_dir, "documents")).select("doc_id", "payload")
 
@@ -902,8 +902,8 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "doc_id bigint, plen bigint, " + ", ".join(
         f"c{i} bigint" for i in range(16)
     )
-    hists = persist_bounded(
-        m.mapInPandas(hist16, schema), f"mm_phash_hists:{sf_dir}"
+    hists = derived(
+        "mm_phash_hists", sf_dir, ("documents",), lambda: m.mapInPandas(hist16, schema)
     )
     g = hists.agg(
         F.sum("plen").alias("tl"),

@@ -31,8 +31,8 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._cache import persist_bounded
-from .common import index_tempdir, t, t_par
+from ._cache import derived, index_tempdir
+from .common import t, t_par
 
 _DIM = 64
 _QUERY_VEC_ID = 0
@@ -177,11 +177,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (sf_dir, nlist) → (assignments parquet path, [(cell_id, centroid)]); the
-# index is immutable once built — the fixture tables never change mid-process
-_IVF_CACHE: dict[tuple[str, int, float], tuple[str, list[tuple[int, list[float]]]]] = {}
-_IVF_FITS = 0  # test hook: counts actual coarse-quantizer fits
-
+_EMB = ("embeddings",)  # the fixture every vector index is derived from
 _NLIST_FLOOR = 4  # minimum coarse-quantizer size (degenerate tiny corpora)
 _NPROBE = 4
 
@@ -377,50 +373,27 @@ def build_ivf_index(
     trains IVF coarse quantizers on ~256k sampled vectors), re-run only on
     corpus drift. The per-cell collect_list is training-side only and
     bounded by the training sample, never by the corpus.
+
+    Returns (assignments parquet path, [(cell_id, centroid)]), derived
+    state of the embeddings fixture per ``nlist`` (None: the scale-aware
+    default, nlist ≈ √N of the training corpus).
     """
-    global _IVF_FITS
     import os
-    import tempfile
 
-    # the embeddings file's mtime is part of the cache key: a fixture
-    # regenerated in place (corpus drift) must trigger a re-fit, not serve
-    # assignments computed from the old data. Index dirs live for the
-    # process (tempdir-per-fit; a superseded fit's dir is simply orphaned
-    # until process exit — bounded by the number of distinct fits).
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    stamp = os.path.getmtime(emb) if os.path.exists(emb) else 0.0
-    vecs = _vecs(spark, sf_dir)
-    if nlist is None:
-        # scale-aware default: nlist ≈ √N of the training corpus (one
-        # count job, paid once per build; the resolved value keys the
-        # memo so explicit-nlist callers like SemDeDup share nothing)
-        nlist = _derived_nlist(vecs.count())
-    key = (os.path.abspath(sf_dir), nlist, stamp)
-    if key in _IVF_CACHE:
-        return _IVF_CACHE[key]
+    def build() -> tuple[str, list[tuple[int, list[float]]]]:
+        vecs = _vecs(spark, sf_dir)
+        n = _derived_nlist(vecs.count()) if nlist is None else nlist
+        seeds = [
+            (int(r.vec_id), [float(x) for x in r.v])
+            for r in vecs.orderBy("vec_id").limit(n).select("vec_id", "v").collect()
+        ]
+        seeds.sort()
+        centers = _fit_centers(vecs, seeds)
+        path = os.path.join(index_tempdir("ivf_idx_"), "assignments")
+        _assign_cells(vecs, centers).write.partitionBy("cell").parquet(path)
+        return path, centers
 
-    seeds = [
-        (int(r.vec_id), [float(x) for x in r.v])
-        for r in vecs.orderBy("vec_id").limit(nlist).select("vec_id", "v").collect()
-    ]
-    seeds.sort()
-    centers = _fit_centers(vecs, seeds)
-    _IVF_FITS += 1
-
-    path = os.path.join(index_tempdir("ivf_idx_"), "assignments")
-    _assign_cells(vecs, centers).write.partitionBy("cell").parquet(path)
-    _IVF_CACHE[key] = (path, centers)
-    # GC superseded fits of the same (sf_dir, nlist): a re-fit only happens
-    # on corpus drift (the mtime is in the key), so the old index dir has no
-    # valid readers left — remove it instead of orphaning one tempdir per
-    # drift until process exit (round-6 ADVICE: harness-independent
-    # lifecycle).
-    import shutil
-
-    for stale in [k for k in _IVF_CACHE if k[:2] == key[:2] and k != key]:
-        old_path, _ = _IVF_CACHE.pop(stale)
-        shutil.rmtree(os.path.dirname(old_path), ignore_errors=True)
-    return _IVF_CACHE[key]
+    return derived("ivf_index", sf_dir, _EMB, build, (nlist,))
 
 
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,23 +434,16 @@ def _probe_ivf(
     )
 
 
-_INC_IVF_CACHE: dict[tuple[str, float], tuple[str, list[tuple[int, list[float]]]]] = {}
-
-
 def build_inc_ivf_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, list[tuple[int, list[float]]]]:
     """The incremental (train-on-80%, frozen-quantizer append) IVF index —
     factored out of ``sim_ann_ivf_incremental`` so the incremental
     SemDeDup path (``dedup.dd_semantic_incremental``) shares the exact
-    same build. Same cache-key discipline as ``build_ivf_index``."""
+    same build."""
     import os
-    import shutil
 
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    stamp = os.path.getmtime(emb) if os.path.exists(emb) else 0.0
-    key = (os.path.abspath(sf_dir), stamp)
-    if key not in _INC_IVF_CACHE:
+    def build() -> tuple[str, list[tuple[int, list[float]]]]:
         vecs = _vecs(spark, sf_dir)
         train = vecs.filter(F.col("vec_id") % 5 != 0)
         nlist = _derived_nlist(train.count())  # sized from the TRAIN subset
@@ -491,11 +457,9 @@ def build_inc_ivf_index(
         # later add share ONE write recipe
         append_to_ivf_index(path, centers, train)
         append_to_ivf_index(path, centers, vecs.filter(F.col("vec_id") % 5 == 0))
-        _INC_IVF_CACHE[key] = (path, centers)
-        for stale in [k for k in _INC_IVF_CACHE if k[0] == key[0] and k != key]:
-            old_path, _ = _INC_IVF_CACHE.pop(stale)
-            shutil.rmtree(os.path.dirname(old_path), ignore_errors=True)
-    return _INC_IVF_CACHE[key]
+        return path, centers
+
+    return derived("ivf_inc_index", sf_dir, _EMB, build)
 
 
 def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -512,21 +476,12 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _probe_ivf(spark.read.parquet(path), centers, _NPROBE)
 
 
-# sf_dir identity → (per-dim mins, per-dim maxes); same mtime-keyed
-# lifecycle as the IVF/minhash index caches
-_SQ8_CACHE: dict[tuple, tuple[list[float], list[float]]] = {}
-
-
 def _sq8_bounds(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[float]]:
     """Per-dimension [min, max] over the similarity corpus — the SQ8
     codebook (128 doubles: metadata at any corpus size, one aggregate
     job). Train-once per corpus, like the IVF coarse quantizer."""
-    import os
 
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    stamp = os.path.getmtime(emb) if os.path.exists(emb) else 0.0
-    key = (os.path.abspath(sf_dir), stamp)
-    if key not in _SQ8_CACHE:
+    def build() -> tuple[list[float], list[float]]:
         row = (
             _vecs(spark, sf_dir)
             .agg(
@@ -535,11 +490,12 @@ def _sq8_bounds(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[flo
             )
             .first()
         )
-        _SQ8_CACHE[key] = (
+        return (
             [float(row[f"mn{i}"]) for i in range(_DIM)],
             [float(row[f"mx{i}"]) for i in range(_DIM)],
         )
-    return _SQ8_CACHE[key]
+
+    return derived("sq8_bounds", sf_dir, _EMB, build)
 
 
 def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,11 +552,6 @@ _PQ_M = 8  # subspaces
 _PQ_SUBDIM = _DIM // _PQ_M
 _PQ_K = 16  # codes per subspace (the codebook is M*K*subdim doubles)
 _PQ_RERANK = 40  # candidates surviving the ADC pass into exact rerank
-
-
-_PQ_CACHE: dict[
-    tuple[str, float], tuple[str, list[list[tuple[int, list[float]]]]]
-] = {}
 
 
 def _encode_pq(
@@ -676,38 +627,31 @@ def build_pq_index(
        the encode argmins; raw vectors stay in the primary table and are
        fetched only for the candidate rerank.
 
-    Memoized on (sf_dir, fixture mtime); superseded index dirs are GC'd."""
+    Derived state of the embeddings fixture."""
     import os
-    import shutil
-    import tempfile
 
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(sf_dir), os.path.getmtime(emb) if os.path.exists(emb) else 0.0)
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
-    vecs = _vecs(spark, sf_dir)
-    books: list[list[tuple[int, list[float]]]] = []
-    for m in range(_PQ_M):
-        sub = vecs.select(
-            "vec_id", F.slice("v", m * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("v")
-        )
-        seeds = [
-            (int(r.vec_id), [float(x) for x in r.v])
-            for r in sub.orderBy("vec_id").limit(_PQ_K).collect()
-        ]
-        seeds.sort()
-        books.append(_fit_centers(sub, seeds, dim=_PQ_SUBDIM))
+    def build() -> tuple[str, list[list[tuple[int, list[float]]]]]:
+        vecs = _vecs(spark, sf_dir)
+        books: list[list[tuple[int, list[float]]]] = []
+        for m in range(_PQ_M):
+            sub = vecs.select(
+                "vec_id", F.slice("v", m * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("v")
+            )
+            seeds = [
+                (int(r.vec_id), [float(x) for x in r.v])
+                for r in sub.orderBy("vec_id").limit(_PQ_K).collect()
+            ]
+            seeds.sort()
+            books.append(_fit_centers(sub, seeds, dim=_PQ_SUBDIM))
 
-    coded = _encode_pq(vecs.select("vec_id", "label", "v"), books)
-    path = os.path.join(index_tempdir("pq_idx_"), "codes")
-    coded.select(
-        "vec_id", "label", *[f"code{m}" for m in range(_PQ_M)]
-    ).write.parquet(path)
-    for stale in [k for k in _PQ_CACHE if k[0] == key[0] and k != key]:
-        old_path, _ = _PQ_CACHE.pop(stale)
-        shutil.rmtree(os.path.dirname(old_path), ignore_errors=True)
-    _PQ_CACHE[key] = (path, books)
-    return _PQ_CACHE[key]
+        coded = _encode_pq(vecs.select("vec_id", "label", "v"), books)
+        path = os.path.join(index_tempdir("pq_idx_"), "codes")
+        coded.select(
+            "vec_id", "label", *[f"code{m}" for m in range(_PQ_M)]
+        ).write.parquet(path)
+        return path, books
+
+    return derived("pq_index", sf_dir, _EMB, build)
 
 
 def _foldsum(vals: list[float]) -> float:
@@ -814,9 +758,6 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_CACHE: dict[tuple[str, float], str] = {}
-
-
 def build_ivfpq_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[
@@ -829,30 +770,21 @@ def build_ivfpq_index(
     8-byte PQ codes (``build_pq_index``) merge into ONE code table
     hive-partitioned on cell — at a billion vectors this is THE serving
     layout: a query scans nprobe/nlist of the partitions and touches 8
-    small ints per row in them. Reuses both memoized sub-indexes, so a
-    rebuild only happens on corpus drift (mtime key), and superseded dirs
-    are GC'd like the others."""
+    small ints per row in them. Reuses both sub-indexes, so a rebuild only
+    happens on corpus drift."""
     import os
-    import shutil
-    import tempfile
 
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        os.path.abspath(sf_dir),
-        os.path.getmtime(emb) if os.path.exists(emb) else 0.0,
-    )
     ivf_path, centers = build_ivf_index(spark, sf_dir)
     pq_path, books = build_pq_index(spark, sf_dir)
-    if key in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[key], centers, books
-    codes = spark.read.parquet(pq_path)
-    cells = spark.read.parquet(ivf_path).select("vec_id", "cell")
-    path = os.path.join(index_tempdir("ivfpq_idx_"), "codes")
-    codes.join(cells, "vec_id").write.partitionBy("cell").parquet(path)
-    for stale in [k for k in _IVFPQ_CACHE if k[0] == key[0] and k != key]:
-        shutil.rmtree(os.path.dirname(_IVFPQ_CACHE.pop(stale)), ignore_errors=True)
-    _IVFPQ_CACHE[key] = path
-    return path, centers, books
+
+    def build() -> str:
+        codes = spark.read.parquet(pq_path)
+        cells = spark.read.parquet(ivf_path).select("vec_id", "cell")
+        path = os.path.join(index_tempdir("ivfpq_idx_"), "codes")
+        codes.join(cells, "vec_id").write.partitionBy("cell").parquet(path)
+        return path
+
+    return derived("ivfpq_index", sf_dir, _EMB, build), centers, books
 
 
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,12 +937,6 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INC_IVFPQ_CACHE: dict[
-    tuple[str, float],
-    tuple[str, list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]],
-] = {}
-
-
 def sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ probe over an INCREMENTALLY-BUILT composite index: the coarse
     quantizer AND all 8 subspace codebooks train once on the initial 80%
@@ -1021,13 +947,10 @@ def sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production billion-vector index, end to end. The oracle replays
     train-on-subset + encode-all bit-for-bit."""
     import os
-    import shutil
-    import tempfile
 
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    stamp = os.path.getmtime(emb) if os.path.exists(emb) else 0.0
-    key = (os.path.abspath(sf_dir), stamp)
-    if key not in _INC_IVFPQ_CACHE:
+    def build() -> tuple[
+        str, list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]
+    ]:
         vecs = _vecs(spark, sf_dir)
         train = vecs.filter(F.col("vec_id") % 5 != 0)
         nlist = _derived_nlist(train.count())  # sized from the TRAIN subset
@@ -1053,11 +976,9 @@ def sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_to_ivfpq_index(
             path, centers, books, vecs.filter(F.col("vec_id") % 5 == 0)
         )
-        _INC_IVFPQ_CACHE[key] = (path, centers, books)
-        for stale in [k for k in _INC_IVFPQ_CACHE if k[0] == key[0] and k != key]:
-            old_path, _, _ = _INC_IVFPQ_CACHE.pop(stale)
-            shutil.rmtree(os.path.dirname(old_path), ignore_errors=True)
-    path, centers, books = _INC_IVFPQ_CACHE[key]
+        return path, centers, books
+
+    path, centers, books = derived("ivfpq_inc_index", sf_dir, _EMB, build)
     return _probe_ivfpq(spark, sf_dir, path, centers, books)
 
 
@@ -1069,7 +990,6 @@ def _recon_frame(
     path: str,
     books: list[list[tuple[int, list[float]]]],
     cells: list[int] | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """DECODE-ONCE reconstruction of a persisted IVFPQ code table:
     (vec_id, cell, vhat, vn) where ``vhat`` is the concatenated
@@ -1079,10 +999,7 @@ def _recon_frame(
     decoding here runs it once per CORPUS ROW (measured 6× on the kNN
     graph at sf0.1). This is the columnar-join equivalent of FAISS's
     per-query ADC lookup tables, which have no analog when the query is a
-    DataFrame column. ``cells`` prunes the decode to probed partitions;
-    ``cache_key`` persists the decoded frame through the bounded
-    registry (its values are deterministic functions of the code table,
-    so reuse across calls is safe)."""
+    DataFrame column. ``cells`` prunes the decode to probed partitions."""
 
     codes = spark.read.parquet(path)
     if cells is not None:
@@ -1133,8 +1050,6 @@ def _recon_frame(
         )
         .withColumn("vn", _norm(F.col("vhat")))
     )
-    if cache_key is not None:
-        recon = persist_bounded(recon, cache_key)
     return recon
 
 
@@ -1264,13 +1179,10 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = _probe_cells_frame(queries, centers)
 
-    # cache key carries the INDEX PATH, not just sf_dir: an in-place
-    # embeddings regeneration yields a new index dir, hence a different
-    # logical plan — keying on the path lets persist_bounded's same-plan
-    # replace contract hold (round-10 ADVICE: an sf_dir-only key popped
-    # the old entry without unpersisting, leaking its cached blocks)
-    recon = _recon_frame(
-        spark, path, books, cache_key=f"knng_recon:{path}"
+    # the decoded frame is persisted: its values are deterministic
+    # functions of the code table, so reuse across calls is safe
+    recon = derived(
+        "knng_recon", sf_dir, _EMB, lambda: _recon_frame(spark, path, books)
     )
     # project to (q_id, vec_id, aip) BEFORE the rank window: the window
     # shuffle would otherwise carry the 64-double query/reconstruction

@@ -19,7 +19,8 @@ from ..lakehouse.table import LakeTable
 from ..streaming.aggregate import windowed_event_agg
 from ..streaming.cdc import run_cdc_file_stream
 from ..streaming.join import interval_join_streams
-from .common import index_tempdir, t
+from ._cache import derived, index_tempdir
+from .common import t
 
 _CUTOFF = "2024-01-15"
 _ROW_DDL = "event_id bigint, user_id bigint, event_type string, value double, ts_us bigint"
@@ -81,17 +82,15 @@ def _seed_target(spark: SparkSession, sf_dir: str, root: str) -> LakeTable:
     return table
 
 
-# envelope corpora are pure functions of (sf_dir, n_files): generate once
-# per process — the stream under test is the consumer, not the generator
-_ENVELOPE_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _envelope_dir(spark: SparkSession, sf_dir: str, n_files: int, copies: int = 1) -> str:
-    """``copies > 1`` replicates the change corpus with shifted key ranges
-    (new users + new event ids per copy) — a larger sustained-throughput
-    corpus for the bench; correctness queries use copies=1."""
-    key = (sf_dir, n_files, copies)
-    if key not in _ENVELOPE_CACHE:
+    """Envelope corpus of the events fixture, built once per (fixture,
+    n_files, copies): the stream under test is the consumer, not the
+    generator. ``copies > 1`` replicates the change corpus with shifted key
+    ranges (new users + new event ids per copy) — a larger
+    sustained-throughput corpus for the bench; correctness queries use
+    copies=1."""
+
+    def build() -> str:
         src = os.path.join(index_tempdir("cdc_src_"), "events")
         changes = _changes(spark, sf_dir)
         if copies > 1:
@@ -121,8 +120,9 @@ def _envelope_dir(spark: SparkSession, sf_dir: str, n_files: int, copies: int = 
                 _envelope_json(
                     changes.filter(F.col("user_id") % n_files == i)
                 ).coalesce(1).write.mode("append").text(src)
-        _ENVELOPE_CACHE[key] = src
-    return _ENVELOPE_CACHE[key]
+        return src
+
+    return derived("cdc_envelopes", sf_dir, ("events",), build, (n_files, copies))
 
 
 def _run_stream(spark: SparkSession, sf_dir: str, n_files: int, max_files: int | None) -> LakeTable:
@@ -143,16 +143,14 @@ def _run_stream(spark: SparkSession, sf_dir: str, n_files: int, max_files: int |
     return table
 
 
-_DLQ_SRC_CACHE: dict[str, str] = {}
-
-
 def _dlq_envelope_dir(spark: SparkSession, sf_dir: str) -> str:
     """Envelope corpus with deterministic POISON rows injected:
     event_id % 7 == 3 → the line is prefixed with junk (unparseable
     JSON); event_id % 7 == 5 → a structurally valid envelope with the
     ``op`` field omitted. Everything else is the healthy mixed
     wrapped/flat corpus."""
-    if sf_dir not in _DLQ_SRC_CACHE:
+
+    def build() -> str:
         src = os.path.join(index_tempdir("cdc_dlqsrc_"), "events")
         ch = _changes(spark, sf_dir)
         row = F.struct("event_id", "user_id", "event_type", "value", "ts_us")
@@ -176,16 +174,13 @@ def _dlq_envelope_dir(spark: SparkSession, sf_dir: str) -> str:
             .otherwise(healthy)
         )
         ch.select(value.alias("value")).write.mode("overwrite").text(src)
-        _DLQ_SRC_CACHE[sf_dir] = src
-    return _DLQ_SRC_CACHE[sf_dir]
+        return src
+
+    return derived("cdc_dlq_envelopes", sf_dir, ("events",), build)
 
 
 _ROW_DDL_V2 = _ROW_DDL + ", channel string"
 _ROW_STRUCT_V2 = _ROW_STRUCT[:-1] + ",channel:string>"
-
-# drift source corpora are pure functions of sf_dir: generate once per
-# process (bench runs 2..N time the stream, not the fixture render)
-_DRIFT_SRC_CACHE: dict[str, tuple[str, str]] = {}
 
 
 def st_cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,7 +209,10 @@ def st_cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=["ts_us", "event_id"],
         drop_cols=["event_id", "ts_us"],
     )
-    if sf_dir not in _DRIFT_SRC_CACHE:
+
+    # the two source corpora are derived state of the fixture (bench runs
+    # 2..N time the stream, not the fixture render)
+    def build() -> tuple[str, str]:
         srcroot = index_tempdir("cdc_driftsrc_")
         ch = _changes(spark, sf_dir)
         # phase 1: the v1 consumer (no channel anywhere)
@@ -246,8 +244,9 @@ def st_cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.to_json(flat))
             .alias("value")
         ).write.mode("overwrite").text(src2)
-        _DRIFT_SRC_CACHE[sf_dir] = (src1, src2)
-    src1, src2 = _DRIFT_SRC_CACHE[sf_dir]
+        return src1, src2
+
+    src1, src2 = derived("cdc_drift_envelopes", sf_dir, ("events",), build)
     run_cdc_file_stream(
         spark, table, row_ddl=_ROW_DDL, src_dir=src1,
         checkpoint_dir=os.path.join(work, "ckpt1"), **kw,
@@ -325,34 +324,17 @@ def st_cdc_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _src_gen(sf_dir: str, table: str) -> float:
-    """Source-parquet mtime, the fixture GENERATION stamp. Every derived
-    JSON corpus cache below keys on it: if the sf_dir fixture is
-    regenerated IN PLACE, a path-only key would silently replay stale
-    JSON to the streaming tiers while the batch tiers read fresh parquet
-    — the staleness class the ``_THEIL_GEN`` / ``_cosupply_edges``
-    guards close elsewhere."""
-    try:
-        return os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        return 0.0
-
-
-# raw-event JSON corpora shared by the non-CDC streaming queries, keyed on
-# (sf_dir, copies, fixture generation) — same lifetime contract as
-# _ENVELOPE_CACHE above: built once per process, reused by every
-# sweep/bench/pytest invocation instead of re-materializing the full corpus
-# (twice, for the dedup variant) into a fresh never-deleted temp dir per
-# call; a regenerated fixture changes the generation stamp and re-derives
-_EVENTS_JSON_CACHE: dict[tuple[str, int, float], str] = {}
-
-
 def _events_json_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
     """Events fixture as JSON-lines files; ``copies > 1`` writes the SAME
     rows into ``copies`` subdirectories (duplicate delivery of every
-    event — the at-least-once corpus for the dedup query)."""
-    key = (sf_dir, copies, _src_gen(sf_dir, "events"))
-    if key not in _EVENTS_JSON_CACHE:
+    event — the at-least-once corpus for the dedup query). Derived state
+    shared by the non-CDC streaming queries: built once per fixture
+    generation, not re-materialized per call. The JSON corpora below
+    follow the same rule, so a fixture regenerated in place never replays
+    stale JSON to the streaming tiers while the batch tiers read fresh
+    parquet."""
+
+    def build() -> str:
         src = os.path.join(index_tempdir("ev_json_"), "events")
         # 32 files per copy: the file count IS the scan parallelism of
         # every consumer's micro-batch (the events parquet fixture is one
@@ -366,8 +348,9 @@ def _events_json_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
         ).repartition(32)
         for i in range(copies):
             ev.write.mode("overwrite").json(os.path.join(src, f"d{i}"))
-        _EVENTS_JSON_CACHE[key] = src
-    return _EVENTS_JSON_CACHE[key]
+        return src
+
+    return derived("events_json", sf_dir, ("events",), build, (copies,))
 
 
 def _events_stream(spark: SparkSession, src: str) -> DataFrame:
@@ -608,8 +591,6 @@ def st_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------ SCD2 stream
 
-_SCD2_STREAM_CACHE: dict[str, str] = {}
-
 
 def st_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type 2 maintained by a STREAMING dimension feed: the same two
@@ -629,7 +610,8 @@ def st_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..lakehouse.scd import scd2_apply, scd2_init
 
     key, attrs = "c_custkey", ["c_mktsegment", "c_acctbal"]
-    if sf_dir not in _SCD2_STREAM_CACHE:
+
+    def build() -> str:
         work = index_tempdir("scd2_stream_")
         src = os.path.join(work, "src")
         cust = t(spark, sf_dir, "customer").select(key, *attrs)
@@ -685,8 +667,9 @@ def st_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _SCD2_STREAM_CACHE[sf_dir] = os.path.join(work, "tbl")
-    return LakeTable(spark, _SCD2_STREAM_CACHE[sf_dir]).read()
+        return os.path.join(work, "tbl")
+
+    return LakeTable(spark, derived("st_scd2", sf_dir, ("customer",), build)).read()
 
 
 def st_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -721,7 +704,6 @@ def st_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "sam", "complete")
 
 
-_DOCS_JSON_CACHE: dict[tuple[str, float], str] = {}
 _DOCS_DDL = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
 
@@ -733,17 +715,16 @@ def _docs_json_dir(spark: SparkSession, sf_dir: str) -> str:
     and everything downstream of the scan that has no shuffle (the
     per-batch Arrow minhash kernel of ``st_neardup_stream``, the word
     explode of ``st_tokenize_stream``) inherits it — a single-file corpus
-    ran those whole stages on ONE core. Keyed on the fixture generation
-    (the ``_EVENTS_JSON_CACHE`` mtime contract) so an in-place
-    regeneration never replays stale JSON."""
-    key = (sf_dir, _src_gen(sf_dir, "documents"))
-    if key not in _DOCS_JSON_CACHE:
+    ran those whole stages on ONE core."""
+
+    def build() -> str:
         src = os.path.join(index_tempdir("doc_json_"), "documents")
         t(spark, sf_dir, "documents").repartition(32).write.mode(
             "overwrite"
         ).json(src)
-        _DOCS_JSON_CACHE[key] = src
-    return _DOCS_JSON_CACHE[key]
+        return src
+
+    return derived("docs_json", sf_dir, ("documents",), build)
 
 
 def st_tokenize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -998,15 +979,11 @@ def st_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# orders fixture as multi-file JSON-lines (forces a REAL multi-batch run
-# under maxFilesPerTrigger) — same lifetime + generation-key contract as
-# _EVENTS_JSON_CACHE
-_ORDERS_JSON_CACHE: dict[tuple[str, float], str] = {}
-
-
 def _orders_json_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _src_gen(sf_dir, "orders"))
-    if key not in _ORDERS_JSON_CACHE:
+    """Orders fixture as multi-file JSON-lines (forces a REAL multi-batch
+    run under maxFilesPerTrigger)."""
+
+    def build() -> str:
         src = os.path.join(index_tempdir("ord_json_"), "orders")
         # 64 files / 32 per trigger: two real micro-batches, each scanning
         # 32 input splits — the R-md5s-per-row weight kernel parallelizes
@@ -1018,8 +995,9 @@ def _orders_json_dir(spark: SparkSession, sf_dir: str) -> str:
             "o_orderkey",
             F.floor(F.col("o_totalprice") * 100).cast("long").alias("c"),
         ).repartition(64).write.mode("overwrite").json(src)
-        _ORDERS_JSON_CACHE[key] = src
-    return _ORDERS_JSON_CACHE[key]
+        return src
+
+    return derived("orders_json", sf_dir, ("orders",), build)
 
 
 def st_bootstrap_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1109,15 +1087,11 @@ def st_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# lineitem change feed as multi-file JSON-lines (forces real multi-batch
-# maintenance) — same lifetime + generation-key contract as
-# _EVENTS_JSON_CACHE
-_LI_JSON_CACHE: dict[tuple[str, float], str] = {}
-
-
 def _lineitem_json_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _src_gen(sf_dir, "lineitem"))
-    if key not in _LI_JSON_CACHE:
+    """Lineitem change feed as multi-file JSON-lines (forces real
+    multi-batch maintenance)."""
+
+    def build() -> str:
         src = os.path.join(index_tempdir("li_json_"), "li")
         t(spark, sf_dir, "lineitem").select(
             "l_orderkey",
@@ -1127,8 +1101,9 @@ def _lineitem_json_dir(spark: SparkSession, sf_dir: str) -> str:
             .cast("long")
             .alias("cents"),
         ).repartition(4).write.mode("overwrite").json(src)
-        _LI_JSON_CACHE[key] = src
-    return _LI_JSON_CACHE[key]
+        return src
+
+    return derived("lineitem_json", sf_dir, ("lineitem",), build)
 
 
 def st_join_view_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1186,18 +1161,15 @@ def st_join_view_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return view_revenue(view)
 
 
-_ORD_PRI_JSON_CACHE: dict[tuple[str, float], str] = {}
-
-
 def _orders_pri_json_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _src_gen(sf_dir, "orders"))
-    if key not in _ORD_PRI_JSON_CACHE:
+    def build() -> str:
         src = os.path.join(index_tempdir("ordp_json_"), "orders")
         t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority"
         ).repartition(4).write.mode("overwrite").json(src)
-        _ORD_PRI_JSON_CACHE[key] = src
-    return _ORD_PRI_JSON_CACHE[key]
+        return src
+
+    return derived("orders_pri_json", sf_dir, ("orders",), build)
 
 
 def st_join_view_bidir_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

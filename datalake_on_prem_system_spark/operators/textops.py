@@ -365,15 +365,18 @@ def tx_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-token surprisal is rounded to 6 before the per-doc sum runs in
     decimal space, so both engines add exactly; the p=freq/N division is
     a single IEEE op on identical doubles."""
-    from ._cache import persist_bounded
+    from ._cache import derived
 
-    docs = t(spark, sf_dir, "documents")
     # three plan branches consume the exploded token frame (total count,
     # vocab counts, probe side of the join) — persist it once or the
     # corpus re-tokenizes per branch
-    toks = persist_bounded(
-        docs.select("doc_id", F.explode(_tokens()).alias("token")),
-        key=f"lm_toks:{sf_dir}",
+    toks = derived(
+        "lm_toks",
+        sf_dir,
+        ("documents",),
+        lambda: t(spark, sf_dir, "documents").select(
+            "doc_id", F.explode(_tokens()).alias("token")
+        ),
     )
     n_total = toks.count()  # driver scalar: one metadata-cheap agg
     freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
@@ -667,7 +670,7 @@ def _word_subword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Persisted (bounded) because the frame is re-read by every consumer and
     Catalyst's projection-collapse would otherwise inline the fold once
     per extracted field."""
-    from ._cache import persist_bounded
+    from ._cache import derived
 
     entries = _induced_vocab_entries(spark, sf_dir)
     lits: list = []
@@ -714,8 +717,8 @@ def _word_subword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(i == acc["pos"], stepped).otherwise(acc)
 
     st = F.aggregate(F.sequence(F.lit(1), F.length(mw)), acc0, step)
-    stats = persist_bounded(
-        words.select("w", st.alias("st")), f"subword_stats:{sf_dir}"
+    stats = derived(
+        "subword_stats", sf_dir, ("documents",), lambda: words.select("w", st.alias("st"))
     )
     return stats.select(
         "w",
@@ -914,7 +917,7 @@ def tx_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint (the bigram table outgrows vocab — AQE broadcasts at
     fixture scale, shuffles at 100 TB); per-doc rollup is the only
     data-sized shuffle."""
-    from ._cache import persist_bounded
+    from ._cache import derived
 
     docs = t(spark, sf_dir, "documents")
     arr = _tokens()
@@ -924,11 +927,13 @@ def tx_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(arr, 2, n - 1),
         lambda a, b: F.struct(a.alias("w1"), F.concat(a, F.lit(" "), b).alias("bg")),
     )
-    doc_bi = persist_bounded(
-        docs.filter(n >= 2).select("doc_id", F.explode(pairs).alias("p")).select(
-            "doc_id", F.col("p.w1").alias("w1"), F.col("p.bg").alias("bg")
-        ),
-        key=f"bigram_stream:{sf_dir}",
+    doc_bi = derived(
+        "bigram_stream",
+        sf_dir,
+        ("documents",),
+        lambda: docs.filter(n >= 2)
+        .select("doc_id", F.explode(pairs).alias("p"))
+        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.bg").alias("bg")),
     )
     ctx = doc_bi.groupBy("w1").agg(F.count(F.lit(1)).alias("uf"))
     bi = doc_bi.groupBy("w1", "bg").agg(F.count(F.lit(1)).alias("bf"))

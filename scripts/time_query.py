@@ -39,7 +39,7 @@ def main() -> int:
         samples = []
         steals = []
         for _ in range(runs):
-            bench._reset_memoized_work(spark, name)
+            bench._reset_memoized_work(spark)
             s0 = bench._read_steal_jiffies()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)

@@ -1,7 +1,8 @@
 """Operator-internal persisted frames must not accumulate over a long
-session (round-6 ADVICE): the bounded registry caps live caches without
-any harness clearCache cooperation, and release_all() returns storage to
-baseline on demand."""
+session: the derived-state registry caps live frames without any harness
+clearCache cooperation, release_all() returns storage to baseline on
+demand, and a fixture regenerated in place releases everything derived
+from it."""
 
 from __future__ import annotations
 
@@ -62,13 +63,14 @@ def test_ivf_refit_removes_superseded_index_dir(spark, sf_dir, tmp_path):
     assert os.path.isdir(os.path.dirname(path2))
 
 
-def test_eviction_pressure_never_kills_newest_same_plan_cache(spark, sf_dir):
+def test_eviction_pressure_never_kills_newest_same_plan_cache(spark, sf_dir, tmp_path):
     """Regression (round-7 full-suite failure): Spark uncaches BY PLAN, so
     evicting an old frame whose plan equals a newer one would silently
-    uncache the newer frame too. The keyed registry replaces same-key
-    entries without unpersisting; only different-key evictions unpersist.
-    After heavy different-key pressure, a fresh dedup query must still
-    serve its shingle frame from cache (InMemoryTableScan in the plan)."""
+    uncache the newer frame too. A registry key holds one frame and a
+    repeat call never unpersists it; only different-key evictions
+    unpersist. After heavy different-key pressure, a fresh dedup query must
+    still serve its shingle frame from cache (InMemoryTableScan in the
+    plan)."""
     from pyspark.sql import functions as F
 
     from datalake_on_prem_system_spark.plans import capture_plan
@@ -76,8 +78,12 @@ def test_eviction_pressure_never_kills_newest_same_plan_cache(spark, sf_dir):
     _cache.release_all()
     # churn: many distinct-plan registrations force evictions
     for i in range(10):
-        _cache.persist_bounded(
-            spark.range(5).withColumn("tag", F.lit(i)), key=f"churn:{i}"
+        _cache.derived(
+            "churn",
+            str(tmp_path),
+            (),
+            lambda i=i: spark.range(5).withColumn("tag", F.lit(i)),
+            (i,),
         )
     plan = capture_plan(dedup.QUERIES["dd_ngram_jaccard"](spark, sf_dir))
     assert "InMemoryTableScan" in plan, "eviction killed the fresh cache entry"
@@ -112,11 +118,10 @@ def test_pq_refit_removes_superseded_code_table(spark, sf_dir, tmp_path):
 
 def test_lpa_label_cache_shared_and_invalidated(spark, sf_dir, tmp_path):
     """g_label_propagation and g_modularity share ONE persisted LPA label
-    frame (same registry key ⇒ same Spark cache entry), so scoring the
-    partition never re-runs the 3-round Pregel loop; and the cosupply
-    mtime-invalidation releases the label frame along with the edge
-    frames it derives from (a regenerated fixture must not serve stale
-    labels)."""
+    frame (same registry entry ⇒ same Spark cache entry), so scoring the
+    partition never re-runs the 3-round Pregel loop; and a new lineitem
+    generation releases the label frame along with the edge frames it
+    derives from (a regenerated fixture must not serve stale labels)."""
     import os
     import shutil
 
@@ -131,33 +136,36 @@ def test_lpa_label_cache_shared_and_invalidated(spark, sf_dir, tmp_path):
     else:
         shutil.copy2(src, work / "lineitem.parquet")
     wdir = str(work)
-    key = f"g_lpa_labels:{wdir}"
 
     _cache.release_all()
     graph_ops.QUERIES["g_label_propagation"](spark, wdir).collect()
-    assert key in _cache._live, "LPA labels must register for reuse"
+    assert _cache.lookup("g_lpa_labels", wdir) is not None, (
+        "LPA labels must register for reuse"
+    )
+    builds = _cache.builds("g_lpa_labels")
     sizes = graph_ops.QUERIES["g_modularity"](spark, wdir).collect()
     assert len(sizes) == 1
-    assert key in _cache._live
+    assert _cache.lookup("g_lpa_labels", wdir) is not None
+    assert _cache.builds("g_lpa_labels") == builds, "modularity must reuse the labels"
 
-    # fixture regenerated in place ⇒ mtime-key miss ⇒ labels released
+    # fixture regenerated in place ⇒ new generation ⇒ labels released
     li = work / "lineitem.parquet"
     bump = os.path.getmtime(li) + 10
     os.utime(li, (bump, bump))
     graph_ops._cosupply_edges(spark, wdir)
-    assert key not in _cache._live, (
+    assert _cache.lookup("g_lpa_labels", wdir) is None, (
         "stale LPA labels must be released on fixture regeneration"
     )
 
 
 def test_curve_caches_plan_keyed_and_released_on_drift(spark, sf_dir, tmp_path):
-    """The dd_threshold_curve / sketch-audit persists are PLAN-keyed (the
-    persist_bounded contract — no mtime in the key) and the generation
-    guard RELEASES them when documents.parquet is regenerated in place:
-    re-keying alone would serve stale cached rows, since Spark's cache is
-    keyed by logical plan, which does not change with file content. Also
-    pins that the curve result actually changes after the corpus does
-    (end-to-end staleness check, not just registry bookkeeping)."""
+    """The dd_threshold_curve / sketch-audit persists are keyed on (kind,
+    path) — no mtime in the key — and a new documents.parquet generation
+    RELEASES them: re-keying alone would serve stale cached rows, since
+    Spark's cache is keyed by logical plan, which does not change with file
+    content. Also pins that the curve result actually changes after the
+    corpus does (end-to-end staleness check, not just registry
+    bookkeeping)."""
     import os
     import shutil
 
@@ -173,14 +181,12 @@ def test_curve_caches_plan_keyed_and_released_on_drift(spark, sf_dir, tmp_path):
     wdir = str(work)
 
     _cache.release_all()
-    dedup._CURVE_GEN.pop(os.path.abspath(wdir), None)
     before = {
         r.threshold: r.n_pairs
         for r in dedup.QUERIES["dd_threshold_curve"](spark, wdir).collect()
     }
-    okey = f"curve_ordered:{os.path.abspath(wdir)}"
-    assert okey in _cache._live and ":" not in okey.split(wdir)[-1], (
-        "curve persist must register under the plan key (no mtime suffix)"
+    assert _cache.lookup("curve_ordered", wdir) is not None, (
+        "curve persist must register under (kind, path) (no mtime in the key)"
     )
 
     # regenerate the corpus IN PLACE (same path, different content)

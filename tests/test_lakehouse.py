@@ -294,6 +294,23 @@ def test_engine_insert_into_decimal_column(spark, tmp_path):
     assert rows == {1: Decimal("10.50"), 2: Decimal("3.25")}
 
 
+def test_engine_query_registers_only_named_tables(spark, tmp_path):
+    """A SQL call registers the catalog tables the statement names (as
+    case-insensitive identifier tokens) and no other; a named table is
+    re-resolved per call, so a commit between two calls shows up."""
+    from datalake_on_prem_system_spark.engine import LakeEngine
+
+    eng = LakeEngine(spark, str(tmp_path / "wh"), namespace="ns")
+    for name in ("rv_named", "rv_other"):
+        spark.catalog.dropTempView(name)
+        eng.write_table(name, spark.createDataFrame([(1, "a")], "id int, v string"))
+    assert eng.query("SELECT count(*) AS n FROM RV_Named;").first().n == 1
+    assert spark.catalog.tableExists("rv_named")
+    assert not spark.catalog.tableExists("rv_other")
+    eng.insert("rv_named", {"id": "2", "v": "b"})
+    assert eng.query("select count(*) as n from rv_named").first().n == 2
+
+
 def _all_data_files(entries):
     import glob
     import os

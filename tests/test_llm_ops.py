@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalake_on_prem_system_spark.operators import dedup, similarity, textops
+from datalake_on_prem_system_spark.operators import _cache, dedup, similarity, textops
 
 
 def _pairs(df):
@@ -50,9 +50,9 @@ def test_minhash_incremental_equals_split_restricted_exact(spark, sf_dir):
     assert got_corpus == want_corpus
     assert got_batch == want_batch
 
-    builds = dedup._MINHASH_BUILDS
+    builds = _cache.builds("minhash_index")
     again = dedup.dd_minhash_incremental(spark, sf_dir).collect()
-    assert dedup._MINHASH_BUILDS == builds, "repeat batch must not rebuild the index"
+    assert _cache.builds("minhash_index") == builds, "repeat batch must not rebuild the index"
     assert {(r.a_id, r.b_id, r.pair_type) for r in again} == {
         (r.a_id, r.b_id, r.pair_type) for r in inc
     }
@@ -159,10 +159,10 @@ def test_ann_ivf_trains_once_and_prunes_probe_scan(spark, sf_dir):
     from datalake_on_prem_system_spark.plans import capture_plan
 
     first = similarity.sim_ann_ivf(spark, sf_dir).collect()
-    fits_after_first = similarity._IVF_FITS
+    fits_after_first = _cache.builds("ivf_index")
     again = similarity.sim_ann_ivf(spark, sf_dir)
     assert again.collect() == first
-    assert similarity._IVF_FITS == fits_after_first, "repeat query must not re-fit"
+    assert _cache.builds("ivf_index") == fits_after_first, "repeat query must not re-fit"
     plan = capture_plan(again)
     assert "PartitionFilters: [" in plan
     seg = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -1360,16 +1360,13 @@ def test_vacuum_plan_hand_traced(spark, tmp_path):
     min key 1) is reclaimable; the live replacing load (evens: 4 rows,
     min 2) and the live append (keys ≡1 mod 4: rows 1 and 5) stay
     pinned."""
-    from datalake_on_prem_system_spark.operators.lakehouse_ops import (
-        _VACUUM_PLAN_CACHE,
-        lh_vacuum_plan,
-    )
+    from datalake_on_prem_system_spark.operators.lakehouse_ops import lh_vacuum_plan
 
     spark.createDataFrame(
         [(k, float(k)) for k in range(1, 9)],
         "o_orderkey bigint, o_totalprice double",
     ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    _VACUUM_PLAN_CACHE.pop(str(tmp_path), None)
+    assert _cache.lookup("lh_vacuum_plan", str(tmp_path)) is None
     got = {
         (r.n_rows, r.min_orderkey): (r.is_live, r.reclaimable)
         for r in lh_vacuum_plan(spark, str(tmp_path)).collect()
@@ -1482,10 +1479,7 @@ def test_compaction_plan_hand_packed(spark, tmp_path):
     plan's totals conserve the table's rows."""
     from datetime import date
 
-    from datalake_on_prem_system_spark.operators.lakehouse_ops import (
-        _COMPACT_PLAN_CACHE,
-        lh_compaction_plan,
-    )
+    from datalake_on_prem_system_spark.operators.lakehouse_ops import lh_compaction_plan
 
     rows = []
     ok = 0
@@ -1496,7 +1490,7 @@ def test_compaction_plan_hand_packed(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey bigint, o_orderdate date"
     ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    _COMPACT_PLAN_CACHE.pop(str(tmp_path), None)
+    assert _cache.lookup("lh_compaction_plan", str(tmp_path)) is None
     got = {r.group_id: r for r in lh_compaction_plan(spark, str(tmp_path)).collect()}
     assert {g: (r.members, r.total_rows, r.compact_worthwhile) for g, r in got.items()} == {
         0: ("2000", 6, False),
@@ -1648,18 +1642,15 @@ def test_l_diversity_homogeneous_class_flagged(spark, tmp_path):
 
 def test_ivfpq_incremental_appends_without_retrain(spark, sf_dir):
     """Incremental IVFPQ lifecycle: a repeat query serves from the cached
-    frozen quantizers (no re-fit — _fit_centers drives _IVF_FITS only in
-    the one-shot builders, so here we pin identical results + cache hit),
+    frozen quantizers (no re-fit: identical results, one build, the same
+    index dir),
     reported cosines stay EXACT vs brute for overlapping ids, and the
     index table holds the whole corpus exactly once."""
-    from datalake_on_prem_system_spark.operators.similarity import (
-        _INC_IVFPQ_CACHE,
-        sim_ivfpq_incremental,
-    )
+    from datalake_on_prem_system_spark.operators.similarity import sim_ivfpq_incremental
 
     first = sim_ivfpq_incremental(spark, sf_dir).collect()
-    key = next(k for k in _INC_IVFPQ_CACHE if k[0] == __import__("os").path.abspath(sf_dir))
-    path, _, _ = _INC_IVFPQ_CACHE[key]
+    builds = _cache.builds("ivfpq_inc_index")
+    path, _, _ = _cache.lookup("ivfpq_inc_index", sf_dir)
     n_corpus = similarity._vecs(spark, sf_dir).count()
     idx = spark.read.parquet(path)
     assert idx.count() == n_corpus
@@ -1667,7 +1658,8 @@ def test_ivfpq_incremental_appends_without_retrain(spark, sf_dir):
 
     again = sim_ivfpq_incremental(spark, sf_dir).collect()
     assert again == first
-    assert _INC_IVFPQ_CACHE[key][0] == path  # same index dir: no rebuild
+    assert _cache.lookup("ivfpq_inc_index", sf_dir)[0] == path  # same index dir
+    assert _cache.builds("ivfpq_inc_index") == builds  # no rebuild
 
     brute = {
         r.vec_id: r.cosine for r in similarity.sim_brute_topk(spark, sf_dir).collect()
