@@ -25,12 +25,14 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions.casting import get_cast_val
 from .functions.keys import find_id_col
 from .lakehouse import LakeCatalog, snapshot_diff
 from .operators.search import (
     all_words_predicate,
+    build_posting_df,
     build_search_df,
     phrase_boost_score,
     ranked_hits_postings,
@@ -44,10 +46,14 @@ class LakeEngine:
         self.spark = spark
         self.catalog = LakeCatalog(spark, warehouse, namespace)
         self.catalog.create_namespace()
-        # (table root, commit version) → materialized search-index path.
-        # Guarded by a lock: the HTTP facade serves this engine from a
-        # ThreadingHTTPServer, so concurrent searches must not double-build.
-        self._search_index_cache: dict[tuple[str, int], str] = {}
+        # (table root, commit version) → (path, schema) of the materialized
+        # search index, its postings and its token dictionary, in that
+        # order. Guarded by a lock: the HTTP facade serves this engine from
+        # a ThreadingHTTPServer, so concurrent searches must not
+        # double-build.
+        self._search_index_cache: dict[
+            tuple[str, int], tuple[tuple[str, StructType], ...]
+        ] = {}
         self._search_index_lock = threading.Lock()
 
     # ------------------------------------------------------------- metadata
@@ -355,8 +361,11 @@ class LakeEngine:
 
     # ------------------------------------------------------------- search
 
-    def _search_index(self, table: str) -> tuple[DataFrame, DataFrame, str, int | None]:
-        """(index df, base df, pk, version) — the 2-column (pk, text) search table
+    def _search_index(
+        self, table: str
+    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, str]:
+        """(index df, postings df, token dictionary df, base df, pk) — the
+        2-column (pk, text) search table and its inverted index,
         materialized per (table root, commit version): the K6 sync_to_es
         analog, invalidated by the next commit, so repeat searches scan the
         narrow index instead of recomputing the projection over the full
@@ -372,7 +381,9 @@ class LakeEngine:
         N's data under version N+1's key. Stale versions' index dirs are
         dropped from the cache but left ON DISK — a still-in-flight lazy
         search DataFrame may read them; ``expire_snapshots`` GCs them with
-        their commits."""
+        their commits. The schemas the build wrote are cached beside the
+        paths, so a repeat search reads all three without a
+        schema-inference job."""
         t = self.catalog.table(table)
         version = t.latest_version()
         df = t.read(version=version) if version is not None else t.read()
@@ -381,28 +392,33 @@ class LakeEngine:
         with self._search_index_lock:
             cached = self._search_index_cache.get(key)
         if cached is None:
-            path = os.path.join(t.root, "_search_index", f"{version}.parquet")
-            build_search_df(df, pk, [c for c in df.columns if c != pk]).write.mode(
-                "overwrite"
-            ).parquet(path)
+            base = os.path.join(t.root, "_search_index")
+            path = os.path.join(base, f"{version}.parquet")
+            search_df = build_search_df(df, pk, [c for c in df.columns if c != pk])
+            search_df.write.mode("overwrite").parquet(path)
+            idx = self.spark.read.schema(search_df.schema).parquet(path)
             # inverted index beside the text table (same lifecycle + same
             # build recipe as the operator path, write_posting_index): the
             # primary serve path reads postings, not rows — ES-parity
             # (the reference's primary path IS the inverted index,
             # api_poc.py:79-101)
-            write_posting_index(
-                self.spark,
-                self.spark.read.parquet(path),
-                pk,
-                os.path.join(t.root, "_search_index", f"{version}_postings.parquet"),
-                os.path.join(t.root, "_search_index", f"{version}_tokens.parquet"),
+            postings = os.path.join(base, f"{version}_postings.parquet")
+            tokens = os.path.join(base, f"{version}_tokens.parquet")
+            write_posting_index(self.spark, idx, pk, postings, tokens)
+            posting_schema = build_posting_df(idx, pk).schema
+            cached = (
+                (path, search_df.schema),
+                (postings, posting_schema),
+                (tokens, StructType([posting_schema["token"]])),
             )
             with self._search_index_lock:
                 for k in [k for k in self._search_index_cache if k[0] == t.root]:
                     self._search_index_cache.pop(k)
-                self._search_index_cache[key] = path
-                cached = path
-        return self.spark.read.parquet(cached), df, pk, version
+                self._search_index_cache[key] = cached
+        idx, postings, tokens = (
+            self.spark.read.schema(schema).parquet(p) for p, schema in cached
+        )
+        return idx, postings, tokens, df, pk
 
     def search(self, table: str, query: str, top_k: int = 50) -> DataFrame:
         """E1–E5: numeric fast path → ranked all-words/phrase search over
@@ -415,15 +431,10 @@ class LakeEngine:
             df = self.catalog.table(table).read()
             pk = find_id_col(df.columns)
             return df.filter(F.col(pk).cast("string") == query)
-        # the VERSION _search_index resolved pins the posting paths too — a
-        # commit landing mid-request must not mix version-N idx/base frames
-        # with version-N+1 postings (round-7 review catch)
-        idx, df, pk, version = self._search_index(table)
-        base = os.path.join(self.catalog.table(table).root, "_search_index")
-        postings = self.spark.read.parquet(
-            os.path.join(base, f"{version}_postings.parquet")
-        )
-        dict_df = self.spark.read.parquet(os.path.join(base, f"{version}_tokens.parquet"))
+        # one _search_index call pins the index, postings and base frames
+        # to the same version — a commit landing mid-request must not mix
+        # version-N idx/base frames with version-N+1 postings
+        idx, postings, dict_df, df, pk = self._search_index(table)
         scored = ranked_hits_postings(idx, postings, dict_df, query, pk, require_all=True)
         if scored is None:
             scored = idx.filter(all_words_predicate(F.col("text"), query)).select(

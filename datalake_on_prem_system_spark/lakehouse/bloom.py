@@ -51,6 +51,7 @@ import os
 from typing import Any
 
 from pyspark.sql import SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 BLOOM_COLS_PROP = "bloom.columns"  # comma-separated column names
 BLOOM_M_PROP = "bloom.m"  # bitset size in bits
@@ -135,6 +136,7 @@ def _strip_scheme(path: str) -> str:
 def attach_blooms(
     spark: SparkSession,
     segment_path: str,
+    schema: StructType,
     entries: list[dict],
     cols: list[str],
     m: int,
@@ -149,16 +151,16 @@ def attach_blooms(
     ``collect_set`` partial-aggregates map-side and its result is bounded
     by ``m`` per group, so driver transfer is O(entries * cols * m) bits —
     independent of row count.  Columns absent from the files or of
-    non-canonical types are skipped.
+    non-canonical types are skipped. ``schema`` is the schema the segment
+    was written with; reading with it runs no schema-inference job.
 
     Zero-row segments short-circuit: a dynamic-partition write of an empty
     frame (e.g. a DELETE matching every row of its touched buckets, or
     create/compact of an empty partitioned frame) emits NO parquet files,
-    so the read-back would fail schema inference — and there is nothing to
-    index anyway."""
+    so there is nothing to index."""
     if not entries or all(int(e.get("n_rows") or 0) == 0 for e in entries):
         return
-    src = spark.read.parquet(segment_path)
+    src = spark.read.schema(schema).parquet(segment_path)
     kinds: dict[str, str] = {}
     for f in src.schema.fields:
         if f.name in cols:

@@ -13,6 +13,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .frames import local_frame
 from .table import LakeTable
 
 
@@ -54,7 +55,8 @@ class LakeCatalog:
     def describe(self, name: str) -> DataFrame:
         """DESCRIBE t → (col_name, data_type) rows."""
         df = self.table(name).read()
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(f.name, f.dataType.simpleString()) for f in df.schema],
             "col_name string, data_type string",
         )

@@ -54,8 +54,10 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .bloom import attach_blooms, bloom_config, bloom_excludes
+from .frames import local_frame
 
 BUCKET_COL = "__bucket"
 RANGE_COL = "__range"  # compact_clustered leaf-dir column (never surfaces)
@@ -911,7 +913,7 @@ class LakeTable:
         )
         for e in entries:
             e["seq"] = version
-        self._maybe_attach_blooms(path, entries, properties)
+        self._maybe_attach_blooms(path, df.schema, entries, properties)
         commit = Commit(
             version=version,
             parent=parent,
@@ -987,29 +989,34 @@ class LakeTable:
             ) from exc
         if bad:
             row = bad[0]
-            one = self.spark.createDataFrame([row], df.schema)
-            names = [
-                name
-                for name, e in checks
-                if one.filter(F.expr(e).eqNullSafe(False)).count() > 0
-            ]
+            hits = (
+                local_frame(self.spark, [row], df.schema)
+                .select(*[F.expr(e).eqNullSafe(False) for _, e in checks])
+                .first()
+            )
+            names = [name for (name, _), hit in zip(checks, hits) if hit]
             raise CheckViolation(
                 f"{operation} violates CHECK constraint(s) {names} "
                 f"({dict(checks)}): {row.asDict()}"
             )
 
     def _maybe_attach_blooms(
-        self, path: str, entries: list[dict], properties: dict[str, str] | None
+        self,
+        path: str,
+        schema: StructType,
+        entries: list[dict],
+        properties: dict[str, str] | None,
     ) -> None:
         """Attach per-entry bloom bitsets to just-written BASE entries when
-        the table configures ``bloom.columns``. Never called for MOR delta
+        the table configures ``bloom.columns``; ``schema`` is the schema the
+        segment at ``path`` was written with. Never called for MOR delta
         segments: deltas are exempt from all value-based pruning (their rows
         decide other rows' survival), so a delta bloom could never be
         consulted — building one would be pure waste."""
         cfg = bloom_config(properties)
         if cfg:
             cols, m, k = cfg
-            attach_blooms(self.spark, path, entries, cols, m, k)
+            attach_blooms(self.spark, path, schema, entries, cols, m, k)
 
     def _publish_delta(
         self,
@@ -1044,7 +1051,9 @@ class LakeTable:
             # every _publish_delta caller writes new_df as a BASE segment
             # (appends / COW bucket rewrites); MOR deltas go through
             # _merge_mor_delta's own commit construction and stay bloom-free
-            self._maybe_attach_blooms(path, new_entries, prev.properties)
+            self._maybe_attach_blooms(
+                path, new_df.schema, new_entries, prev.properties
+            )
             new_paths.append(path)
             entries = carried + new_entries
         if any(e.get("delta") is not None for e in entries):
@@ -1260,8 +1269,6 @@ class LakeTable:
         return self.read_where(F.col(col).isin([r.k for r in rows]))
 
     def _schema(self, commit: Commit):
-        from pyspark.sql.types import StructType
-
         return StructType.fromJson(json.loads(commit.schema_json))
 
     def _read_data(self, commit: Commit) -> DataFrame:
@@ -1292,8 +1299,6 @@ class LakeTable:
             # scan and anti-join the tombstones out. The DV side is tiny
             # (matched positions only) — broadcastable; base bytes are
             # never rewritten.
-            from pyspark.sql.types import StructType
-
             base = [e for e in entries if not e.get("dv")]
             schema = StructType.fromJson(json.loads(schema_json))
             scan = (
@@ -1313,8 +1318,6 @@ class LakeTable:
         base_entries = [e for e in entries if e.get("delta") is None]
         if not deltas:
             return self._read_entries(base_entries, schema_json)
-        from pyspark.sql.types import StringType, StructField, StructType
-
         pks = _spec_pks(bucket_spec)
         logical = StructType.fromJson(json.loads(schema_json))
         delta_schema = StructType(list(logical.fields) + [StructField("__op", StringType(), True)])
@@ -1378,14 +1381,10 @@ class LakeTable:
         re-inferred from directory names (string '0123' → int 123, leading
         zeros lost). Bucket leaf dirs are passed directly, so ``__bucket``
         never surfaces as a partition column."""
-        from functools import reduce
-
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(json.loads(schema_json))
         paths = [e["path"] for e in entries]
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
 
         # Partition evolution / mixed layouts: a hive-partitioned segment
         # (subdirs like col=value) and a plain segment cannot share ONE
@@ -1434,7 +1433,8 @@ class LakeTable:
                 c.n_rows = self._resolve(c.files, c.schema_json, c.bucket_spec).count()
                 self._rewrite_commit(c)
             rows.append(c)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(c.version, c.parent, c.operation, c.n_rows, c.committed_at) for c in rows],
             "version int, parent int, operation string, n_rows bigint, committed_at double",
         ).orderBy(F.desc("version"))
@@ -1459,7 +1459,8 @@ class LakeTable:
             )
             for e in commit.files
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "path string, bucket int, n_rows bigint, seq int, "
             "is_delta boolean, hive boolean, stats_json string",
@@ -1526,7 +1527,7 @@ class LakeTable:
             ", ".join(f"`{c}` string" for c in pby)
             + ", n_files int, n_rows bigint"
         )
-        return self.spark.createDataFrame(rows, ddl)
+        return local_frame(self.spark, rows, ddl)
 
     def _rewrite_commit(self, commit: Commit) -> None:
         """Atomically replace a PUBLISHED commit's JSON in place (only for
@@ -1691,8 +1692,6 @@ class LakeTable:
         keep their types; genuinely new fields are added nullable. Returns
         None when a shared column changes type — that needs a real
         unionByName rewrite, not a metadata-only evolution."""
-        from pyspark.sql.types import StructField, StructType
-
         cur_by_name = {f.name: f for f in cur_schema.fields}
         out = list(cur_schema.fields)
         for f in batch_schema.fields:
@@ -2116,8 +2115,8 @@ class LakeTable:
         Point-DML fast path: when the predicate is a pk equality or pk
         IN-list (the facade's every ``/update/{t}/{id}`` and
         ``/delete/{t}/{id}`` call), the touched buckets are computed from
-        the LITERAL values — a LocalTableScan over len(literals) rows, zero
-        table I/O — instead of scanning the table. At 100 TB that is the
+        the LITERAL values (``_buckets_for_literals``: no table I/O and no
+        Spark job) instead of scanning the table. At 100 TB that is the
         difference between a point DML costing O(1 bucket) and O(table).
         Arbitrary predicates keep the scan."""
         self._assert_no_dv(operation)
@@ -2171,8 +2170,9 @@ class LakeTable:
     ) -> set[int] | None:
         """Bucket ids holding the given pk literal values, computed with the
         SAME JVM expression (`_bucket_expr` = pmod(Murmur3, n)) the layout
-        was written with — over a len(values)-row LocalTableScan, never the
-        table. The literals are cast to the table's pk type first: Murmur3
+        was written with — projected over a len(values)-row local relation
+        (``local_frame``), never the table, so the probe runs no Spark job.
+        The literals are cast to the table's pk type first: Murmur3
         of int32(5) and int64(5) differ, and the predicate is resolved
         against the column's type. Returns None (caller falls back to the
         scan path) when the pk is missing from the schema or a literal
@@ -2181,15 +2181,10 @@ class LakeTable:
         if not values:
             return set()
         try:
-            from pyspark.sql.types import StructField, StructType
-
             pk_field = self._schema(prev)[pk]
             one_col = StructType([StructField(pk, pk_field.dataType, True)])
-            probe = self.spark.createDataFrame([(v,) for v in values], one_col)
-            return {
-                r["b"]
-                for r in probe.select(_bucket_expr(pk, n).alias("b")).distinct().collect()
-            }
+            probe = local_frame(self.spark, [(v,) for v in values], one_col)
+            return {r["b"] for r in probe.select(_bucket_expr(pk, n).alias("b")).collect()}
         except Exception:
             return None
 
@@ -2337,8 +2332,10 @@ class LakeTable:
         unknown = {k for r in rows for k in r} - set(schema.fieldNames())
         if unknown:
             raise ValueError(f"unknown columns: {sorted(unknown)}")
-        new = self.spark.createDataFrame(
-            [tuple(r.get(c) for c in schema.fieldNames()) for r in rows], schema
+        new = local_frame(
+            self.spark,
+            [tuple(r.get(c) for c in schema.fieldNames()) for r in rows],
+            schema,
         )
         self._enforce_constraints(new, prev.properties, "insert")
         if prev.partition_by:  # keep hive layout consistent: rewrite path
@@ -2434,7 +2431,7 @@ class LakeTable:
         entries = self._harvest_leaf_entries(path, RANGE_COL, bucket_ids=False)
         for e in entries:
             e["seq"] = version
-        self._maybe_attach_blooms(path, entries, properties)
+        self._maybe_attach_blooms(path, df.schema, entries, properties)
         commit = Commit(
             version=version,
             parent=parent,

@@ -286,8 +286,12 @@ def cdc_apply_batch(
     flat = normalize_envelope(spread, row_ddl)
     dedup = last_writer_wins(flat, pk, order_cols).drop(*drop_cols)
     if table.mor_ready(pk):
-        # merge-on-read hot path: ONE Spark job — parse → dedup → bucketed
-        # delta write. The empty/unparseable-batch guard (P12) is the
+        # merge-on-read hot path: one plan — parse → dedup → bucketed
+        # delta write — but not one Spark job. AQE submits each shuffle
+        # stage (the ``spread`` repartition, the last-writer-wins dedup,
+        # the bucket repartition) as its own map job before the write
+        # job, so a delta micro-batch runs 4 jobs, and a batch that also
+        # compacts runs 8. The empty/unparseable-batch guard (P12) is the
         # write's own footer count inside merge (no commit when 0 rows),
         # so no separate probe job runs per micro-batch. An elided empty
         # commit is detected from the RETURNED commit (it is the parent,
